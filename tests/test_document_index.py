@@ -3,6 +3,7 @@ with the deterministic embedder (hermetic, §5.4)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -115,6 +116,41 @@ def test_delete_document(doc_index):
     stats = doc_index.get_catalog_stats()
     assert stats["documents"] == n - 1
     assert doc_index.get_document_id("file:///tmp/extra.txt") is None
+
+
+def test_reupsert_then_delete_leaves_no_stale_chunks(spark, tmp_path):
+    """Documents and chunks are written through a hidden staging
+    directory and swapped in: after upsert, re-upsert of the same uris
+    and a delete, no staging directory is left behind, the catalog
+    counts match the tables, and no chunk of a replaced or deleted
+    document survives in any bucket."""
+    base = str(tmp_path / "swapidx")
+    idx = SparkDocumentIndex(spark, base, vector_dim=16, chunk_size=32)
+    idx.create()
+    first = idx.upsert_documents(DOCS)
+    second = idx.upsert_documents(
+        [{"uri": d["uri"], "text": d["text"].upper()} for d in DOCS]
+    )
+    idx.delete_document(DOCS[0]["uri"])
+
+    leftovers = [
+        os.path.join(root, d)
+        for root, dirs, _files in os.walk(base)
+        for d in dirs
+        if d.startswith("_staging-")
+    ]
+    assert leftovers == []
+    live = {r.document_id for r in idx.documents().collect()}
+    assert live == set(second[1:])
+    chunk_docs = [
+        r.document_id
+        for r in spark.read.parquet(idx.index.path).select("document_id").collect()
+    ]
+    assert set(chunk_docs) == live  # nothing of first[*] or second[0]
+    stats = idx.get_catalog_stats()
+    assert stats["documents"] == len(live) == len(DOCS) - 1
+    assert stats["chunks"] == len(chunk_docs)
+    assert not set(first) & set(chunk_docs)
 
 
 def test_bulk_ingest_dataframe_path(spark, tmp_path):

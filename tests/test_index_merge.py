@@ -144,3 +144,58 @@ class TestPartitionScopedMerge:
         ids = {r.id for r in idx.items().select("id").collect()}
         assert {"n1", "n2"} <= ids and not {"k02", "k03"} & ids
         assert len(ids) == 32
+
+
+def _staging_dirs(path: str) -> list[str]:
+    return [e for e in os.listdir(path) if e.startswith("_staging-")]
+
+
+class TestStagedWrite:
+    """The MERGE writes touched buckets once to a hidden staging
+    directory, validates from metrics observed by that write, and only
+    then swaps buckets in."""
+
+    def test_commit_runs_at_most_four_jobs(self, spark, idx):
+        sc = spark.sparkContext
+        for i in range(5):
+            idx.upsert_item({"id": f"u{i}", "vector": [1.0, float(i)]})
+        idx.delete_item("k07")
+        group = "test-commit-jobs"
+        sc.setJobGroup(group, "commit of 5 upserts and 1 delete")
+        try:
+            idx.commit()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+        ids = {r.id for r in idx.items().select("id").collect()}
+        assert {f"u{i}" for i in range(5)} <= ids and "k07" not in ids
+        assert len(ids) == 36
+        assert _staging_dirs(idx.path) == []
+
+    def test_rejected_insert_publishes_nothing(self, idx):
+        before = _snapshot(idx.path)
+        idx.upsert_item({"id": "fresh", "vector": [3.0, 3.0]})
+        idx.insert_item({"id": "k05", "vector": [1.0, 2.0]})
+        with pytest.raises(ValueError, match="already exists"):
+            idx.commit()
+        idx.cancel_update()
+        assert _snapshot(idx.path) == before
+        assert _staging_dirs(idx.path) == []
+        assert idx.items().count() == 32
+
+    def test_delete_of_missing_id_is_noop(self, idx):
+        before = _snapshot(idx.path)
+        idx.delete_item("no-such-id")
+        idx.commit()
+        assert _snapshot(idx.path) == before
+        assert _staging_dirs(idx.path) == []
+
+    def test_items_frame_replaced_after_commit(self, idx):
+        old = idx.items()
+        assert old.count() == 32
+        idx.upsert_item({"id": "late", "vector": [4.0, 4.0]})
+        idx.commit()
+        new = idx.items()
+        assert new is not old and not old.is_cached
+        assert new.count() == 33
+        assert new.filter(F.col("id") == "late").count() == 1

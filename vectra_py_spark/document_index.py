@@ -30,12 +30,17 @@ import uuid
 from collections.abc import Mapping
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vectra_py_spark.embeddings import DeterministicEmbedder, embed_chunks, scrub_newlines
-from vectra_py_spark.index import SparkVectorIndex
+from vectra_py_spark.index import (
+    SparkVectorIndex,
+    discard_staging,
+    swap_in,
+    write_staging,
+)
 from vectra_py_spark.render import RenderedSection, ScoredChunk, render_sections
 from vectra_py_spark.text.splitter import split_documents
 from vectra_py_spark.text.tokenizers import get_tokenizer
@@ -189,12 +194,6 @@ class SparkDocumentIndex:
         the index instead (strictly cheaper than merging 100% churn).
         """
         u = F.col(uri_col).cast("string")
-        if docs_df.filter(u.isNull()).limit(1).count():
-            raise ValueError(
-                "upsert_documents_df: NULL uri in batch (an unaddressable "
-                "document can never be looked up or replaced) — filter or "
-                "fix upstream"
-            )
         fname = F.element_at(F.split(u, "/"), -1)
         inferred = F.when(
             fname.contains("."),
@@ -250,33 +249,50 @@ class SparkDocumentIndex:
         MERGE, distributed chunk+embed, one partition-scoped items
         MERGE (reference delete-then-insert semantics,
         ``local_document_index.py:137-141``)."""
-        # Pin the staged rows ONCE: the frame is consumed three times
-        # (replaced-ids probe, documents merge, chunk/embed) — without
-        # this a DataFrame-sourced batch re-scans its source each time
-        # and a nondeterministic source could hand each consumer a
-        # different row set (orphan chunks / chunkless documents).
-        staged = staged.localCheckpoint(eager=True)
+        # Pin the staged rows ONCE: the frame is consumed twice
+        # (documents merge, chunk/embed) — without this a
+        # DataFrame-sourced batch re-scans its source each time and a
+        # nondeterministic source could hand each consumer a different
+        # row set (orphan chunks / chunkless documents).
+        # The same job counts NULL uris (only a DataFrame batch can hold
+        # one): nothing is written before the check below.
+        checked = Observation()
+        staged = staged.observe(
+            checked, F.count_if(F.col("uri").isNull()).alias("null_uris")
+        ).localCheckpoint(eager=True)
+        if checked.get["null_uris"]:
+            raise ValueError(
+                "upsert_documents_df: NULL uri in batch (an unaddressable "
+                "document can never be looked up or replaced) — filter or "
+                "fix upstream"
+            )
         # replace-by-uri upsert of document rows (window MERGE, as in
-        # SparkVectorIndex.commit)
-        existing = self.documents()
-        replaced_ids = [
-            r.document_id
-            for r in existing.join(
-                staged.select("uri"), "uri", "left_semi"
-            ).select("document_id").collect()
-        ]
+        # SparkVectorIndex._merge); the pre-existing rows that lose to a
+        # staged row of the same uri are the replaced documents, observed
+        # by the same write job
+        obs = Observation()
         merged = (
-            existing.withColumn("_new", F.lit(0))
+            self.documents()
+            .withColumn("_new", F.lit(0))
             .unionByName(staged.withColumn("_new", F.lit(1)))
             .withColumn(
                 "_rn",
                 F.row_number().over(Window.partitionBy("uri").orderBy(F.desc("_new"))),
             )
+            .observe(
+                obs,
+                F.collect_set(
+                    F.when((F.col("_new") == 0) & (F.col("_rn") > 1), F.col("document_id"))
+                ).alias("replaced"),
+            )
             .filter(F.col("_rn") == 1)
             .drop("_new", "_rn")
-            .localCheckpoint(eager=True)
         )
-        merged.write.mode("overwrite").parquet(self.docs_path)
+        # the new documents table is written beside ``documents/`` and
+        # swapped in with one directory rename
+        staging = write_staging(merged, self.base_path)
+        swap_in(self.spark, staging, {self.docs_path: staging})
+        replaced_ids = obs.get["replaced"]
 
         # chunk + embed the staged docs (one distributed pipeline)
         chunks = split_documents(
@@ -330,15 +346,28 @@ class SparkDocumentIndex:
 
     # -- D6: delete -------------------------------------------------------
     def delete_document(self, uri: str) -> None:
-        doc_id = self.get_document_id(uri)
-        if doc_id is None:
-            return
-        remaining_docs = (
-            self.documents().filter(F.col("uri") != F.lit(uri)).localCheckpoint(True)
+        """D6: drop the document row(s) of ``uri`` and their chunks. The
+        ids to delete are observed while the remaining documents are
+        written; an unknown uri discards that write."""
+        obs = Observation()
+        remaining = (
+            self.documents()
+            .observe(
+                obs,
+                F.collect_set(
+                    F.when(F.col("uri") == F.lit(uri), F.col("document_id"))
+                ).alias("ids"),
+            )
+            .filter(F.col("uri") != F.lit(uri))
         )
-        remaining_docs.write.mode("overwrite").parquet(self.docs_path)
+        staging = write_staging(remaining, self.base_path)
+        doc_ids = obs.get["ids"]
+        if not doc_ids:
+            discard_staging(self.spark, staging)
+            return
+        swap_in(self.spark, staging, {self.docs_path: staging})
         # partition-scoped: only buckets containing this doc's chunks rewrite
-        self.index.delete_where(F.col("document_id") == F.lit(doc_id))
+        self.index.delete_where(F.col("document_id").isin(*doc_ids))
 
     # -- A3: stats --------------------------------------------------------
     def get_catalog_stats(self) -> dict[str, Any]:

@@ -133,7 +133,14 @@ def audio_fingerprint_df(df, id_col: str = "media_id",
                     rows["hash"].append(None)
                     rows["t"].append(None)
                     rows["error"].append(str(exc) or "decode error")
-            yield pd.DataFrame(rows)
+            # typed nullable columns: a plain list mixing 64-bit ints and
+            # None becomes float64 and rounds away the hashes' low bits
+            yield pd.DataFrame({
+                id_col: rows[id_col],
+                "hash": pd.array(rows["hash"], dtype="Int64"),
+                "t": pd.array(rows["t"], dtype="Int32"),
+                "error": rows["error"],
+            })
 
     return df.select(id_col, payload_col).mapInPandas(
         run,

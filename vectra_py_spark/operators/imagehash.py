@@ -190,6 +190,9 @@ def _decode_pixels(payload: bytes) -> np.ndarray:
     raise ValueError(f"not a supported pixel format: kind={kind!r}")
 
 
+_NULLABLE_INT = {"phash": "Int64", "dhash": "Int64", "height": "Int32", "width": "Int32"}
+
+
 def media_phash_df(df, id_col: str = "media_id", payload_col: str = "data"):
     """(id, payload) rows → (id, phash, dhash, height, width, error):
     one narrow Arrow pass, per-row ValueError quarantine (corrupt or
@@ -216,7 +219,12 @@ def media_phash_df(df, id_col: str = "media_id", payload_col: str = "data"):
                     rows["height"].append(None)
                     rows["width"].append(None)
                     rows["error"].append(str(exc) or "decode error")
-            yield pd.DataFrame(rows)
+            # typed nullable columns: a plain list mixing 64-bit ints and
+            # None becomes float64 and rounds away the hashes' low bits
+            yield pd.DataFrame({
+                k: pd.array(v, dtype=_NULLABLE_INT[k]) if k in _NULLABLE_INT else v
+                for k, v in rows.items()
+            })
 
     return df.select(id_col, payload_col).mapInPandas(
         run,

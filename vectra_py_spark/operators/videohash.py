@@ -117,15 +117,19 @@ def video_phash_df(
                     for fi, fp in video_frame_hashes(payload, stride):
                         ids.append(mid)
                         idxs.append(fi)
-                        fps.append(np.int64(fp))
+                        fps.append(fp)
                         errs.append(None)
                 except ValueError as exc:
                     ids.append(mid)
                     idxs.append(None)
                     fps.append(None)
                     errs.append(str(exc) or "decode error")
+            # typed nullable columns: a plain list mixing 64-bit ints and
+            # None becomes float64 and rounds away the hashes' low bits
             yield pd.DataFrame({
-                id_col: ids, "frame_idx": idxs, "phash": fps,
+                id_col: ids,
+                "frame_idx": pd.array(idxs, dtype="Int32"),
+                "phash": pd.array(fps, dtype="Int64"),
                 "error": errs,
             })
 

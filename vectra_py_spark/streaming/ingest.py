@@ -11,7 +11,7 @@ exactly-once per batch id, and ``Trigger.AvailableNow`` turns the same
 query into an incremental batch backfill (process everything new, then
 stop — the cron-friendly mode).
 
-100 TB notes: merge_batch rewrites the table (plain-Parquet MERGE);
+100 TB notes: merge_batch rewrites the touched buckets (plain-Parquet MERGE);
 on a real deployment the same ``foreachBatch`` body becomes a Delta
 MERGE (file-level rewrite only) or an append-only table compacted by
 `sources/maintenance.py`. The streaming plumbing — trigger, checkpoint,
