@@ -190,6 +190,26 @@ class TestStagedWrite:
         assert _snapshot(idx.path) == before
         assert _staging_dirs(idx.path) == []
 
+    def test_upsert_and_delete_of_same_id_in_one_commit_deletes_it(self, idx):
+        # the staged row displaces the stored one and is then deleted:
+        # its bucket must still be rewritten
+        idx.upsert_item({"id": "k05", "vector": [9.0, 9.0]})
+        idx.delete_item("k05")
+        idx.commit()
+        ids = {r.id for r in idx.items().select("id").collect()}
+        assert "k05" not in ids and len(ids) == 31
+        assert _staging_dirs(idx.path) == []
+
+    def test_insert_and_delete_of_existing_id_commits_the_delete(self, idx):
+        # a staged delete wins over an insert of the same id, so the
+        # insert cannot clash
+        idx.insert_item({"id": "k05", "vector": [9.0, 9.0]})
+        idx.delete_item("k05")
+        idx.commit()
+        ids = {r.id for r in idx.items().select("id").collect()}
+        assert "k05" not in ids and len(ids) == 31
+        assert _staging_dirs(idx.path) == []
+
     def test_items_frame_replaced_after_commit(self, idx):
         old = idx.items()
         assert old.count() == 32

@@ -348,7 +348,9 @@ class SparkDocumentIndex:
     def delete_document(self, uri: str) -> None:
         """D6: drop the document row(s) of ``uri`` and their chunks. The
         ids to delete are observed while the remaining documents are
-        written; an unknown uri discards that write."""
+        written, so a known uri needs no lookup job. An unknown uri
+        discards that write, so it still reads and writes the whole
+        documents table once (O(documents)) before returning."""
         obs = Observation()
         remaining = (
             self.documents()

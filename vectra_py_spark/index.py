@@ -391,9 +391,9 @@ class SparkVectorIndex:
         desc) = 1`` (SURVEY.md §2.8 D2) merges them with ``staged``, which
         carries an ``_insert`` flag per row. The result is written ONCE
         to a staging directory (:func:`write_staging`); the same job
-        observes whether an insert met an existing id, which buckets
-        changed (lost a row or gained a staged one) and which still hold
-        rows. A clash, or a merge that changed nothing, discards the
+        observes whether a surviving insert met an existing id, which
+        buckets changed (a row was deleted or a staged row landed there)
+        and which still hold rows. A clash, or a merge that changed nothing, discards the
         staging write; otherwise the cached items frame is dropped and
         each changed bucket is swapped in or, if it emptied, deleted
         (:func:`swap_in`). Untouched bucket files are never opened for
@@ -443,8 +443,13 @@ class SparkVectorIndex:
         out = (
             rows.observe(
                 obs,
-                F.max("_clash").alias("clash"),
-                F.collect_set(F.when(gone != new, F.col(BUCKET_COL))).alias("changed"),
+                # a dropped row cannot clash: a delete staged beside an
+                # insert of the same id wins
+                F.max(F.col("_clash") & ~gone).alias("clash"),
+                # a staged row may have displaced a stored one in the
+                # window above, so every bucket a staged row lands in
+                # counts as changed, even if that row is then deleted
+                F.collect_set(F.when(gone | new, F.col(BUCKET_COL))).alias("changed"),
                 F.collect_set(F.when(~gone, F.col(BUCKET_COL))).alias("kept"),
             )
             .filter(~gone)

@@ -5519,7 +5519,7 @@ def _sql_range_join() -> str:
 # / merge_batch + partition-scoped commit), and returns the post-DML
 # table state; the DuckDB oracle states the same final relation
 # declaratively. This turns the mutation path itself — staging, window
-# MERGE, bucket pruning, dynamic partition overwrite — into a
+# MERGE, bucket pruning, staging write and bucket swap — into a
 # hash-checked driver entry instead of a pytest-only surface.
 # ---------------------------------------------------------------------------
 _DML_SUBSET = 100  # vec_id < 100 exists at every fixture sf
