@@ -10,13 +10,8 @@ Phases per query (fresh plan every time, like bench_warm's adhoc loop):
   exec    `.collect()` on the already-planned DataFrame — job submit,
           codegen/JIT, task scheduling, the actual scan+topk, results
 
-The ``repeated_*`` keys measure the plan-reuse experiment (VERDICT r6
-item 3): `cosine_topk_param` binds the vector as a broadcast 1-row
-relation so the plan is byte-identical across vectors. Measured result:
-SLOWER than the literal plan — Spark has no analyzed-plan cache, the
-binding join adds a broadcast exchange per query, and the HOF cosine is
-interpreted (no per-vector JIT existed to save). See README "Supported
-serving mode" for the full finding; batch serving remains the answer.
+See README "Supported serving mode" for the finding; batch serving
+remains the answer for repeated queries.
 
 Usage: python scripts/adhoc_breakdown.py   (prints one JSON line)
 """
@@ -67,28 +62,8 @@ def main() -> None:
         build_ms.append((t1 - t0) * 1000.0)
         exec_ms.append((t2 - t1) * 1000.0)
 
-    # repeated-shape variant (VERDICT r6 item 3): the query vector rides
-    # as a broadcast 1-row relation, so the generated code is
-    # byte-identical across vectors and the codegen cache hits — only
-    # analysis + broadcast + scheduling remain per query.
-    sim.cosine_topk_param(emb, seeded_query_vector(64, seed=99), k=10).collect()
-    rep_build_ms = []
-    rep_exec_ms = []
-    for s in range(n):
-        q = seeded_query_vector(64, seed=200 + s)
-        t0 = time.perf_counter()
-        df = sim.cosine_topk_param(emb, q, k=10)
-        df._jdf.queryExecution().executedPlan()
-        t1 = time.perf_counter()
-        df.collect()
-        t2 = time.perf_counter()
-        rep_build_ms.append((t1 - t0) * 1000.0)
-        rep_exec_ms.append((t2 - t1) * 1000.0)
-
     build_ms.sort()
     exec_ms.sort()
-    rep_build_ms.sort()
-    rep_exec_ms.sort()
     out = {
         "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1],
         "queries": n,
@@ -97,11 +72,6 @@ def main() -> None:
         "total_ms_median": round(build_ms[n // 2] + exec_ms[n // 2], 1),
         "plan_build_ms_mean": round(sum(build_ms) / n, 1),
         "exec_ms_mean": round(sum(exec_ms) / n, 1),
-        "repeated_build_ms_median": round(rep_build_ms[n // 2], 1),
-        "repeated_exec_ms_median": round(rep_exec_ms[n // 2], 1),
-        "repeated_total_ms_median": round(
-            rep_build_ms[n // 2] + rep_exec_ms[n // 2], 1
-        ),
     }
     print(json.dumps(out), flush=True)
     spark.stop()

@@ -3,14 +3,23 @@ with the deterministic embedder (hermetic, §5.4)."""
 
 from __future__ import annotations
 
+import math
 import os
 import shutil
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-from vectra_py_spark.document_index import SparkDocumentIndex, infer_doc_type
+from vectra_py_spark.document_index import (
+    DOCUMENT_SCHEMA,
+    SparkDocumentIndex,
+    infer_doc_type,
+)
+from vectra_py_spark.embeddings import scrub_newlines
+from vectra_py_spark.render import ScoredChunk, render_sections
+from vectra_py_spark.text.tokenizers import get_tokenizer
 
 pytestmark = pytest.mark.slow  # excluded from the smoke tier
 
@@ -95,6 +104,106 @@ def test_render_sections_end_to_end(doc_index):
     assert uri == "file:///corpus/colors.txt"
     assert sections and sections[0].text  # W1: whole doc fits budget
     assert sections[0].score == 1.0
+
+
+def _brute_force_ranking(idx, query_text, max_documents, max_chunks):
+    """D7 over ``items().toPandas()``: the engine's cosine summed left to
+    right in doubles, chunk top-k by (score desc, id), the fsum mean per
+    document, documents by (doc_score desc, document_id)."""
+    qvec = [
+        float(x)
+        for x in idx.embedder_factory().create_embeddings(
+            [scrub_newlines(query_text)]
+        )[0]
+    ]
+    q_norm = sum(x * x for x in qvec) ** 0.5
+    scored = []
+    for r in idx.index.items().toPandas().itertuples():
+        d = 0.0
+        for a, b in zip(r.vector, qvec):
+            d += float(a) * b
+        scored.append(
+            (d / (r.norm * q_norm), r.id, r.document_id, int(r.start_pos), int(r.end_pos))
+        )
+    scored.sort(key=lambda t: (-t[0], t[1]))
+    by_doc = {}
+    for score, cid, doc_id, start, end in scored[:max_chunks]:
+        by_doc.setdefault(doc_id, []).append((start, end, score, cid))
+    ranked = sorted(
+        (
+            (doc_id, math.fsum(c[2] for c in cs) / len(cs), sorted(cs))
+            for doc_id, cs in by_doc.items()
+        ),
+        key=lambda t: (-t[1], t[0]),
+    )[:max_documents]
+    docs = {r.document_id: r for r in idx.documents().toPandas().itertuples()}
+    return [
+        (doc_id, docs[doc_id].uri, score, chunks, docs[doc_id].text)
+        for doc_id, score, chunks in ranked
+    ]
+
+
+@pytest.mark.parametrize(
+    "query_text", ["citrus fruit vitamin", "blue sky color", "stars orbit sun"]
+)
+def test_query_documents_matches_brute_force(doc_index, query_text):
+    want = _brute_force_ranking(doc_index, query_text, max_documents=2, max_chunks=4)
+    got = doc_index.query_documents(
+        query_text, max_documents=2, max_chunks=4
+    ).collect()
+    assert [
+        (r.document_id, r.uri, r.doc_score, [tuple(c) for c in r.chunks], r.text)
+        for r in got
+    ] == want
+
+    tokenizer = get_tokenizer()
+    rendered = doc_index.render_document_sections(
+        query_text, max_documents=2, max_chunks=4, max_tokens=8, max_sections=2
+    )
+    assert [(d, u, s) for d, u, s, _ in rendered] == [w[:3] for w in want]
+    for (_, _, _, sections), (_, _, _, chunks, text) in zip(rendered, want):
+        expect = render_sections(
+            text,
+            [ScoredChunk("", c[2], c[0], c[1]) for c in chunks],
+            tokenizer,
+            8,
+            2,
+        )
+        assert sections == expect
+
+
+def test_warm_rag_read_runs_two_jobs(spark, doc_index):
+    """A warm RAG read is the chunk top-k collect plus the winners'
+    uri/text collect."""
+    doc_index.render_document_sections("blue sky color")  # warm the items cache
+    sc = spark.sparkContext
+    group = f"rag-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm render_document_sections")
+    try:
+        out = doc_index.render_document_sections("citrus fruit vitamin")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert out
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
+def test_chunk_without_document_row_has_null_uri_and_text(spark, tmp_path):
+    idx = SparkDocumentIndex(
+        spark, str(tmp_path / "orphan"), vector_dim=64, chunk_size=64
+    )
+    idx.create()
+    idx.upsert_documents(DOCS)
+    fruit = idx.get_document_id("file:///corpus/fruit.md")
+    kept = [r for r in idx.documents().collect() if r.document_id != fruit]
+    spark.createDataFrame(kept, DOCUMENT_SCHEMA).write.mode("overwrite").parquet(
+        idx.docs_path
+    )
+    res = idx.query_documents("citrus fruit vitamin", max_documents=3).collect()
+    orphans = [r for r in res if r.document_id == fruit]
+    assert len(orphans) == 1
+    assert orphans[0].uri is None and orphans[0].text is None
+    assert orphans[0].chunks
+    assert all(r.uri is not None for r in res if r.document_id != fruit)
 
 
 def test_reupsert_replaces_chunks(doc_index):

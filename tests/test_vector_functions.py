@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pytest
@@ -13,6 +14,7 @@ from vectra_py_spark.functions.vector import (
     cosine_to_query,
     dot,
     l2_norm,
+    normalized_cosine,
     vector_literal,
 )
 
@@ -73,9 +75,72 @@ def test_zero_query_vector(spark):
     assert got == 0.0
 
 
+def _bits(x):
+    """IEEE bit pattern, one canonical value for every NaN."""
+    if x is None or math.isnan(x):
+        return x if x is None else "nan"
+    return struct.pack("<d", x)
+
+
+def _composed_cosine(vector_col, query, norm_col=None):
+    """The per-element Column composition ``cosine_to_query`` parses in
+    one string: one ``F.lit`` per element, Python lambdas for the HOFs."""
+    q = [float(x) for x in query]
+    q_norm = sum(x * x for x in q) ** 0.5
+    if q_norm == 0.0:
+        return F.lit(0.0)
+    d = dot(F.col(vector_col), F.array(*[F.lit(x) for x in q]))
+    if norm_col is not None:
+        return normalized_cosine(d, F.col(norm_col), F.lit(q_norm))
+    return d / (l2_norm(F.col(vector_col)) * F.lit(q_norm))
+
+
+@pytest.mark.parametrize("norm_col", [None, "norm"])
+def test_cosine_to_query_bit_identical_to_composed_hofs(spark, norm_col):
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)]
+    rows.append((40, [-0.0, 5e-324, 1e308, -1e308, 1.0, 2.0, 3.0, 4.0]))
+    df = spark.createDataFrame(rows, ["i", "vector"]).withColumn(
+        "norm", l2_norm(F.col("vector"))
+    )
+    inf, nan = float("inf"), float("nan")
+    queries = [[float(x) for x in rng.normal(size=8)] for _ in range(5)] + [
+        [0.0] * 8,
+        [-0.0] * 8,
+        [-0.0] + [1.0] * 7,
+        [5e-324] * 8,
+        [5e-324] + [0.5] * 7,
+        [1e308] + [1.0] * 7,
+        [nan] + [1.0] * 7,
+        [inf] + [1.0] * 7,
+        [-inf] + [1.0] * 7,
+    ]
+    for q in queries:
+        out = (
+            df.select(
+                "i",
+                cosine_to_query("vector", q, norm_col).alias("got"),
+                _composed_cosine("vector", q, norm_col).alias("want"),
+            )
+            .orderBy("i")
+            .collect()
+        )
+        assert [_bits(r.got) for r in out] == [_bits(r.want) for r in out], q
+
+
 def test_vector_literal(spark):
-    df = spark.range(1).select(vector_literal([1.5, -2.5]).alias("v"))
-    assert df.collect()[0].v == [1.5, -2.5]
+    """Every double survives the parsed literal bit for bit (NaN as NaN)."""
+    rng = np.random.default_rng(3)
+    vals = [
+        1.5, -2.5, 0.0, -0.0, 0.1, 1.0 / 3.0, 5e-324, -5e-324,
+        2.2250738585072014e-308, 1e308, -1.7976931348623157e308,
+        float("nan"), float("inf"), float("-inf"),
+    ]
+    vals += [float(x) for x in rng.normal(size=50)]
+    # arbitrary bit patterns: subnormals, huge exponents, every sign
+    vals += [float(x) for x in np.frombuffer(rng.bytes(8 * 200), dtype="<f8")]
+    [row] = spark.range(1).select(vector_literal(vals).alias("v")).collect()
+    assert [_bits(x) for x in row.v] == [_bits(x) for x in vals]
 
 
 def test_float_input_cast(spark):

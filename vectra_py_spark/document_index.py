@@ -15,17 +15,21 @@ vector index — as:
 Ingest (D5, §3.2) is ONE batch job per upsert batch:
 documents → splitter ``mapInPandas`` (T1–T4) → embedding ``mapInPandas``
 (E1/E3, token-budget batched A6) → norm (A1) → append to items.
-Query (D7, §3.3): embed query driver-side (E5) → V5 top-k-chunks →
-group by document (A4) → mean score (A5) → join documents (V6) →
-top documents (O2). Rendering (D8/W1–W6) stays driver-side.
+Query (D7, §3.3): embed query driver-side (E5) → V5 top-k-chunks,
+collected (≤ max_chunks rows) → group by document (A4) and mean score
+(A5) on the driver, like the reference → top documents (O2) → one
+collect of the winners' uri and text (V6, ≤ max_documents rows).
+Two bounded collects, so evaluation is eager. Rendering (D8/W1–W6)
+stays driver-side.
 
 Scale: both tables partition by id hash; ingest is shuffle-free
-(split/embed are narrow maps); the query's only wide op is the
-``groupBy(document_id)`` over ≤ max_chunks rows (post-limit, trivial).
+(split/embed are narrow maps); a query runs no shuffle — one top-k
+scan of the items and one filtered scan of the documents table.
 """
 
 from __future__ import annotations
 
+import math
 import uuid
 from collections.abc import Mapping
 from typing import Any
@@ -46,6 +50,30 @@ from vectra_py_spark.text.splitter import split_documents
 from vectra_py_spark.text.tokenizers import get_tokenizer
 
 __all__ = ["SparkDocumentIndex", "DOCUMENT_SCHEMA", "infer_doc_type"]
+
+_RANKED_SCHEMA = T.StructType(
+    [
+        T.StructField("document_id", T.StringType(), True),
+        T.StructField("uri", T.StringType(), True),
+        T.StructField("doc_score", T.DoubleType(), True),
+        T.StructField(
+            "chunks",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("start_pos", T.LongType(), True),
+                        T.StructField("end_pos", T.LongType(), True),
+                        T.StructField("score", T.DoubleType(), True),
+                        T.StructField("id", T.StringType(), True),
+                    ]
+                ),
+                False,
+            ),
+            False,
+        ),
+        T.StructField("text", T.StringType(), True),
+    ]
+)
 
 DOCUMENT_SCHEMA = T.StructType(
     [
@@ -388,40 +416,68 @@ class SparkDocumentIndex:
         max_chunks: int = 50,
         filter_ast: Mapping[str, Any] | None = None,
     ) -> DataFrame:
-        """Returns (document_id, uri, doc_score, chunks ARRAY<STRUCT>)."""
+        """Returns (document_id, uri, doc_score, chunks ARRAY<STRUCT>,
+        text), ordered by doc_score DESC, document_id.
+
+        Evaluated eagerly, like the reference: the ranking runs two
+        bounded collects (see :meth:`_rank_documents`) and the result
+        is a local DataFrame over at most ``max_documents`` rows.
+        """
+        return self.spark.createDataFrame(
+            self._rank_documents(query_text, max_documents, max_chunks, filter_ast),
+            _RANKED_SCHEMA,
+        )
+
+    def _rank_documents(
+        self,
+        query_text: str,
+        max_documents: int,
+        max_chunks: int,
+        filter_ast: Mapping[str, Any] | None,
+    ) -> list[tuple]:
+        """D7 ranking as ``(document_id, uri, doc_score, chunks, text)``
+        tuples, ``chunks`` as ``(start_pos, end_pos, score, id)``.
+
+        Two Spark jobs: the chunk top-k, collected (≤ ``max_chunks``
+        rows), and one filtered read of the winners' uri and text
+        (≤ ``max_documents`` rows). Grouping, the mean and the ordering
+        run on the driver over those rows, as in the reference
+        (``local_document_index.py:221-254``). A winner with no
+        document row keeps a NULL uri and text.
+        """
         provider = self.embedder_factory()
         qvec = provider.create_embeddings([scrub_newlines(query_text)])[0]  # E5
-        topk = self.index.query_items(qvec, max_chunks, filter_ast)
-        grouped = (
-            topk.groupBy("document_id")  # A4
-            .agg(
-                F.avg("score").alias("doc_score"),  # A5
-                F.sort_array(
-                    F.collect_list(
-                        F.struct("start_pos", "end_pos", "score", "id")
-                    )
-                ).alias("chunks"),  # O3: chunks in document order
+        hits = (
+            self.index.query_items(qvec, max_chunks, filter_ast)
+            .select("document_id", "start_pos", "end_pos", "score", "id")
+            .collect()
+        )
+        by_doc: dict[str, list[tuple]] = {}
+        for h in hits:  # A4
+            by_doc.setdefault(h.document_id, []).append(
+                (h.start_pos, h.end_pos, h.score, h.id)
             )
-        )
-        winners = (
-            grouped.orderBy(F.desc("doc_score"), F.asc("document_id"))  # O2
-            .limit(max_documents)
-        )
-        # hydrate AFTER the limit (S6): semi-join shrinks the
-        # corpus-sized documents relation (which carries full text) to
-        # the ≤max_documents winners before anything is broadcast —
-        # never a forced broadcast of an unbounded relation
-        docs = self.documents().select("document_id", "uri", "text")
-        docs_small = docs.join(
-            F.broadcast(winners.select("document_id")),
-            "document_id",
-            "left_semi",
-        )
-        return (
-            winners.join(F.broadcast(docs_small), "document_id", "left")  # V6
-            .select("document_id", "uri", "doc_score", "chunks", "text")
-            .orderBy(F.desc("doc_score"), F.asc("document_id"))
-        )
+        ranked = sorted(
+            (
+                (doc_id, math.fsum(c[2] for c in chunks) / len(chunks), sorted(chunks))
+                for doc_id, chunks in by_doc.items()
+            ),  # A5 mean; O3: chunks in document order
+            key=lambda r: (-r[1], r[0]),
+        )[:max_documents]  # O2
+        if not ranked:
+            return []
+        docs = {
+            r.document_id: (r.uri, r.text)
+            for r in self.documents()
+            .filter(F.col("document_id").isin([r[0] for r in ranked]))
+            .select("document_id", "uri", "text")
+            .collect()
+        }  # V6
+        out = []
+        for doc_id, doc_score, chunks in ranked:
+            uri, text = docs.get(doc_id, (None, None))
+            out.append((doc_id, uri, doc_score, chunks, text))
+        return out
 
     def query_documents_hybrid(
         self,
@@ -558,20 +614,17 @@ class SparkDocumentIndex:
         """
         tokenizer = get_tokenizer()
         out = []
-        for row in self.query_documents(
+        for doc_id, uri, doc_score, chunks, text in self._rank_documents(
             query_text, max_documents, max_chunks, filter_ast
-        ).collect():
-            chunks = [
+        ):
+            scored = [
                 ScoredChunk(
-                    text="",
-                    score=c.score,
-                    start_pos=int(c.start_pos),
-                    end_pos=int(c.end_pos),
+                    text="", score=score, start_pos=int(start), end_pos=int(end)
                 )
-                for c in row.chunks
+                for start, end, score, _ in chunks
             ]
             sections = render_sections(
-                row.text or "", chunks, tokenizer, max_tokens, max_sections
+                text or "", scored, tokenizer, max_tokens, max_sections
             )
-            out.append((row.document_id, row.uri, row.doc_score, sections))
+            out.append((doc_id, uri, doc_score, sections))
         return out

@@ -7,11 +7,19 @@ higher-order functions (``zip_with`` / ``aggregate`` / ``transform``).
 
 Why expressions and not a pandas UDF: at query time the pattern is a
 1×N semi-join (one literal query vector against every row). A HOF
-expression stays in whole-stage codegen — no Python worker, no Arrow
-hop, no serialization of the vector column — and feeds directly into
-``TakeOrderedAndProject`` for top-k. A vectorized numpy matmul UDF wins
-only for N×M all-pairs scoring, which lives in
-:mod:`vectra_py_spark.operators.similarity`.
+expression runs inside the JVM — no Python worker, no Arrow hop, no
+serialization of the vector column — and feeds directly into
+``TakeOrderedAndProject`` for top-k. The HOFs are ``CodegenFallback``
+(interpreted per row), so there is no per-vector generated code to
+save. A vectorized numpy matmul UDF wins only for N×M all-pairs
+scoring, which lives in :mod:`vectra_py_spark.operators.similarity`.
+
+Query-time expressions (:func:`vector_literal`, :func:`cosine_to_query`)
+are built as one parsed SQL string (``F.expr``), not one Py4J call per
+vector element and per lambda: for a 64-dim query that driver-side
+Column construction took ~43 ms, and it is paid by every single read.
+The parsed tree is the same as the composed one (:func:`dot`,
+:func:`l2_norm`, :func:`normalized_cosine`), so scores are unchanged.
 
 All math is done in DOUBLE regardless of the stored element type
 (test fixtures store FLOAT) so scores are engine-portable and match the
@@ -20,6 +28,7 @@ DuckDB oracle bit-for-bit after rounding.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column
@@ -42,9 +51,30 @@ def vector_literal(vec: Sequence[float]) -> Column:
 
     The reference passes the query vector as a Python list parameter
     (``local_index.py:125-128``); here it travels to executors as a plan
-    literal (constant-folded, no broadcast variable needed).
+    literal (constant-folded, no broadcast variable needed). Built as
+    one parsed ``array(…)`` expression; every double round-trips
+    exactly.
     """
-    return F.array(*[F.lit(float(x)) for x in vec])
+    return F.expr(_sql_array(vec))
+
+
+def _sql_double(x: float) -> str:
+    """Spark SQL spelling of a double that parses back to the same bits
+    (``repr`` is the shortest round-tripping decimal)."""
+    x = float(x)
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
+
+
+def _sql_array(vec: Sequence[float]) -> str:
+    return "array(" + ", ".join(_sql_double(x) for x in vec) + ")"
+
+
+def _sql_col(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
 
 
 def to_double_array(col: Column | str) -> Column:
@@ -90,26 +120,38 @@ def normalized_cosine(
 
 
 def cosine_to_query(
-    vector_col: Column | str,
+    vector_col: str,
     query: Sequence[float],
-    norm_col: Column | str | None = None,
+    norm_col: str | None = None,
 ) -> Column:
     """Score every row against one query vector.
 
     Computes the query norm once on the driver (``local_index.py:135``)
     and embeds it as a literal; uses the stored per-row ``norm`` column
     when available (A1) to avoid recomputing row norms per query.
+
+    The same tree as ``normalized_cosine(dot(col, vector_literal(q)),
+    norm, q_norm)`` (or ``dot / (l2_norm(col) * q_norm)`` without a
+    stored norm), parsed from one SQL string.
     """
-    vc = F.col(vector_col) if isinstance(vector_col, str) else vector_col
     q = [float(x) for x in query]
     q_norm = sum(x * x for x in q) ** 0.5
     if q_norm == 0.0:
         return F.lit(0.0)
-    d = dot(vc, vector_literal(q))
+    v = _sql_col(vector_col)
+    d = (
+        f"aggregate(zip_with({v}, {_sql_array(q)}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0D, (acc, x) -> acc + x)"
+    )
     if norm_col is not None:
-        nc = F.col(norm_col) if isinstance(norm_col, str) else norm_col
-        return normalized_cosine(d, nc, F.lit(q_norm))
-    return d / (l2_norm(vc) * F.lit(q_norm))
+        n = _sql_col(norm_col)
+    else:
+        n = (
+            f"sqrt(aggregate(transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
+            "0D, (acc, x) -> acc + x))"
+        )
+    return F.expr(f"{d} / ({n} * {_sql_double(q_norm)})")
 
 
 def dot_sql(vector_expr: str, query: Sequence[float]) -> str:

@@ -612,7 +612,7 @@ class SparkVectorIndex:
         """V5: filter → cosine score → top-k.
 
         Physical plan (verify with ``.explain``): Parquet scan with pushed
-        filter → codegen'd HOF cosine projection →
+        filter → HOF cosine projection (one parsed expression) →
         ``TakeOrderedAndProject(k)``. The query vector + its norm are plan
         literals (computed once, ``local_index.py:135``). Ties broken by
         id for determinism (the reference's sort is unstable on ties).

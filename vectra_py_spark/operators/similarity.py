@@ -36,7 +36,6 @@ from vectra_py_spark.functions.vector import (
     cosine_to_query,
     cosine_to_query_sql,
     dot,
-    l2_norm,
     vector_literal,
 )
 from vectra_py_spark.session import spread
@@ -165,52 +164,6 @@ def cosine_topk(
         df.withColumn(
             "score", F.round(cosine_to_query(vector_col, query), _DP)
         )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def cosine_topk_param(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int,
-    id_col: str = "vec_id",
-    vector_col: str = "embedding",
-) -> DataFrame:
-    """Repeated-shape adhoc variant (VERDICT r6 item 3) — the measured
-    plan-reuse EXPERIMENT, kept with its negative result: identical
-    results to :func:`cosine_topk`, but the query vector (and its norm)
-    enters the plan as a BROADCAST 1-row relation instead of a literal
-    array, making the physical plan byte-identical across query vectors
-    (pinned in tests/test_operators.py).
-
-    Measured outcome (scripts/adhoc_breakdown.py, ``repeated_*`` row,
-    sf0.1 local[32]): this is SLOWER than the literal plan (~300 vs
-    ~175 ms fresh), because (a) Spark 4.1 has no analyzed-plan cache —
-    the ~90 ms analysis/planning cost is re-paid for every new
-    DataFrame regardless of how the vector binds; (b) the binding
-    itself adds a BroadcastNestedLoopJoin + a per-query broadcast
-    exchange; and (c) there is no per-vector JIT to save — the HOF
-    cosine is CodegenFallback (interpreted), and complex-type literals
-    land in the codegen references array, not the source text, so even
-    literal plans share generated code. Spark's per-plan floor is
-    architectural; the serving answer for repeated queries is
-    :func:`cosine_topk_batch` (~1.9 ms/query warm). README
-    "Supported serving mode" documents the full finding."""
-    spark = df.sparkSession
-    q = [float(x) for x in query]
-    q_norm = float(sum(x * x for x in q) ** 0.5)
-    qdf = spark.createDataFrame(
-        [(q, q_norm)], "__q array<double>, __q_norm double"
-    )
-    vc = F.col(vector_col)
-    score = F.when(F.col("__q_norm") == 0.0, F.lit(0.0)).otherwise(
-        dot(vc, F.col("__q")) / (l2_norm(vc) * F.col("__q_norm"))
-    )
-    return (
-        df.crossJoin(F.broadcast(qdf))
-        .withColumn("score", F.round(score, _DP))
-        .drop("__q", "__q_norm")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
