@@ -21,8 +21,6 @@ from vectra_py_spark.embeddings import scrub_newlines
 from vectra_py_spark.render import ScoredChunk, render_sections
 from vectra_py_spark.text.tokenizers import get_tokenizer
 
-pytestmark = pytest.mark.slow  # excluded from the smoke tier
-
 DOCS = [
     {
         "uri": "file:///corpus/fruit.md",
@@ -55,6 +53,7 @@ def doc_index(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_infer_doc_type():
     assert infer_doc_type("http://x/a.md") == "md"
     assert infer_doc_type("http://x/a.HTML") == "html"
@@ -62,6 +61,7 @@ def test_infer_doc_type():
     assert infer_doc_type("a.md", explicit="py") == "py"
 
 
+@pytest.mark.slow
 def test_ingest_created_chunks(doc_index):
     stats = doc_index.get_catalog_stats()
     assert stats["documents"] == 3
@@ -79,6 +79,7 @@ def test_ingest_created_chunks(doc_index):
         assert src[int(it.start_pos) : int(it.end_pos) + 1]
 
 
+@pytest.mark.slow
 def test_uri_id_roundtrip(doc_index):
     doc_id = doc_index.get_document_id("file:///corpus/fruit.md")
     assert doc_id is not None
@@ -86,6 +87,7 @@ def test_uri_id_roundtrip(doc_index):
     assert doc_index.get_document_id("file:///nope") is None
 
 
+@pytest.mark.slow
 def test_query_documents_ranking(doc_index):
     res = doc_index.query_documents("citrus fruit vitamin", max_documents=2).collect()
     assert 1 <= len(res) <= 2
@@ -95,6 +97,7 @@ def test_query_documents_ranking(doc_index):
     assert res[0].doc_score >= res[-1].doc_score
 
 
+@pytest.mark.slow
 def test_render_sections_end_to_end(doc_index):
     rendered = doc_index.render_document_sections(
         "blue sky color", max_documents=1, max_tokens=2000
@@ -143,6 +146,7 @@ def _brute_force_ranking(idx, query_text, max_documents, max_chunks):
     ]
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize(
     "query_text", ["citrus fruit vitamin", "blue sky color", "stars orbit sun"]
 )
@@ -172,6 +176,7 @@ def test_query_documents_matches_brute_force(doc_index, query_text):
         assert sections == expect
 
 
+@pytest.mark.slow
 def test_warm_rag_read_runs_two_jobs(spark, doc_index):
     """A warm RAG read is the chunk top-k collect plus the winners'
     uri/text collect."""
@@ -187,6 +192,7 @@ def test_warm_rag_read_runs_two_jobs(spark, doc_index):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
 
 
+@pytest.mark.slow
 def test_chunk_without_document_row_has_null_uri_and_text(spark, tmp_path):
     idx = SparkDocumentIndex(
         spark, str(tmp_path / "orphan"), vector_dim=64, chunk_size=64
@@ -206,6 +212,7 @@ def test_chunk_without_document_row_has_null_uri_and_text(spark, tmp_path):
     assert all(r.uri is not None for r in res if r.document_id != fruit)
 
 
+@pytest.mark.slow
 def test_reupsert_replaces_chunks(doc_index):
     before = doc_index.get_catalog_stats()
     doc_index.upsert_document(
@@ -218,6 +225,7 @@ def test_reupsert_replaces_chunks(doc_index):
     assert res[0].uri == "file:///corpus/space.txt"
 
 
+@pytest.mark.slow
 def test_delete_document(doc_index):
     doc_index.upsert_document("file:///tmp/extra.txt", "Extra doc about cheese.")
     n = doc_index.get_catalog_stats()["documents"]
@@ -227,6 +235,7 @@ def test_delete_document(doc_index):
     assert doc_index.get_document_id("file:///tmp/extra.txt") is None
 
 
+@pytest.mark.slow
 def test_reupsert_then_delete_leaves_no_stale_chunks(spark, tmp_path):
     """Documents and chunks are written through a hidden staging
     directory and swapped in: after upsert, re-upsert of the same uris
@@ -262,6 +271,7 @@ def test_reupsert_then_delete_leaves_no_stale_chunks(spark, tmp_path):
     assert not set(first) & set(chunk_docs)
 
 
+@pytest.mark.slow
 def test_bulk_ingest_dataframe_path(spark, tmp_path):
     """upsert_documents_df: corpus DataFrame in, same query surface
     out; deterministic ids make re-ingest idempotent."""
@@ -302,6 +312,7 @@ def test_bulk_ingest_dataframe_path(spark, tmp_path):
     assert len(ranked.collect()) >= 1
 
 
+@pytest.mark.slow
 def test_bulk_ingest_batch_hygiene(spark, tmp_path):
     """NULL uris raise; duplicate uris keep one deterministic winner;
     blank explicit doc_type falls back to extension inference; default
@@ -337,6 +348,7 @@ def test_bulk_ingest_batch_hygiene(spark, tmp_path):
     assert doc_ids == {rows[0].document_id}
 
 
+@pytest.mark.slow
 def test_query_documents_hybrid_lexical_arm_finds_exact_terms(spark, tmp_path):
     """Hybrid retrieval: the lexical arm must surface the document that
     literally contains the query terms even when the (deterministic)
@@ -382,3 +394,48 @@ def test_query_documents_hybrid_lexical_arm_finds_exact_terms(spark, tmp_path):
         filter_ast={"document_id": {"$eq": colors_id}},
     ).collect()
     assert out3 and all(r.uri == "file:///corpus/colors.txt" for r in out3)
+
+
+def test_upsert_batch_job_budget(spark, tmp_path):
+    """Smoke-tier job budget for a document upsert: a 20-document
+    DataFrame batch that replaces 2 stored uris runs at most 8 Spark
+    jobs: two (an exchange, then the step's own job) for each of the
+    uri-deduped docs checkpoint, the documents MERGE, the split+embed
+    chunk checkpoint (which also runs every batch check) and the chunk
+    MERGE. The
+    batch's ~1000 chunks cover all 64 buckets, so the replaced chunks
+    need no bucket probe. The session lists the 64 bucket directories
+    without a listing job, as ``get_spark`` configures it."""
+    listing = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    saved = spark.conf.get(listing)
+    spark.conf.set(listing, "4096")
+    try:
+        idx = SparkDocumentIndex(
+            spark, str(tmp_path / "docidx"), vector_dim=16, chunk_size=16
+        )
+        idx.create()
+
+        def docs(uris, salt):
+            text = " ".join(f"w{(salt * 31 + i) % 97}" for i in range(200))
+            return [{"uri": u, "text": f"{u} {text}"} for u in uris]
+
+        idx.upsert_documents(docs(["file:///a.txt", "file:///b.txt"], 0))
+        batch = spark.createDataFrame(
+            docs(["file:///a.txt", "file:///b.txt"], 1)
+            + docs([f"file:///new{i}.txt" for i in range(18)], 2)
+        )
+        sc = spark.sparkContext
+        group = f"upsert-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "20-document upsert replacing 2 uris")
+        try:
+            idx.upsert_documents_df(batch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    finally:
+        spark.conf.set(listing, saved)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8
+    assert idx.documents().count() == 20
+    chunks = idx.index.items()
+    assert chunks.count() >= 800
+    assert chunks.select("document_id").distinct().count() == 20
+    assert chunks.filter(F.col("start_pos") == 0).count() == 20  # old chunks gone

@@ -11,11 +11,17 @@ from __future__ import annotations
 
 import hashlib
 import os
+import subprocess
+import sys
+import uuid
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from vectra_py_spark.index import BUCKET_COL, SparkVectorIndex
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _snapshot(path: str) -> dict[str, dict[str, str]]:
@@ -150,23 +156,28 @@ def _staging_dirs(path: str) -> list[str]:
     return [e for e in os.listdir(path) if e.startswith("_staging-")]
 
 
+def _run_in_group(spark, fn) -> list[int]:
+    """Run ``fn`` under a fresh job group; return the group's job ids."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 class TestStagedWrite:
     """The MERGE writes touched buckets once to a hidden staging
     directory, validates from metrics observed by that write, and only
     then swaps buckets in."""
 
     def test_commit_runs_at_most_four_jobs(self, spark, idx):
-        sc = spark.sparkContext
         for i in range(5):
             idx.upsert_item({"id": f"u{i}", "vector": [1.0, float(i)]})
         idx.delete_item("k07")
-        group = "test-commit-jobs"
-        sc.setJobGroup(group, "commit of 5 upserts and 1 delete")
-        try:
-            idx.commit()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+        assert len(_run_in_group(spark, idx.commit)) <= 4
         ids = {r.id for r in idx.items().select("id").collect()}
         assert {f"u{i}" for i in range(5)} <= ids and "k07" not in ids
         assert len(ids) == 36
@@ -219,3 +230,108 @@ class TestStagedWrite:
         assert new is not old and not old.is_cached
         assert new.count() == 33
         assert new.filter(F.col("id") == "late").count() == 1
+
+
+class TestBatchChecks:
+    """``merge_batch`` validates on its checkpoint job and in the merge
+    window; a rejected batch publishes nothing."""
+
+    def test_duplicate_id_publishes_nothing(self, spark, idx):
+        before = _snapshot(idx.path)
+        staged = spark.createDataFrame(
+            [("n1", [1.0, 1.0]), ("k03", [2.0, 2.0]), ("n1", [3.0, 3.0])],
+            "id string, vector array<double>",
+        )
+        with pytest.raises(ValueError, match="duplicate id"):
+            idx.merge_batch(staged)
+        assert _snapshot(idx.path) == before
+        assert _staging_dirs(idx.path) == []
+        assert idx.items().count() == 32
+
+    def test_null_id_rejected(self, spark, idx):
+        before = _snapshot(idx.path)
+        staged = spark.createDataFrame(
+            [("n1", [1.0, 1.0]), (None, [2.0, 2.0])], "id string, vector array<double>"
+        )
+        with pytest.raises(ValueError, match="NULL id"):
+            idx.merge_batch(staged)
+        assert _snapshot(idx.path) == before
+
+    def test_dim_mismatch_raises_before_any_write(self, spark, idx):
+        before = _snapshot(idx.path)
+        staged = spark.createDataFrame(
+            [("n1", [1.0, 1.0]), ("n2", [1.0, 2.0, 3.0])], "id string, vector array<double>"
+        )
+
+        def merge():
+            with pytest.raises(ValueError, match="dimension"):
+                idx.merge_batch(staged)
+
+        assert len(_run_in_group(spark, merge)) == 1  # the checkpoint only
+        assert _snapshot(idx.path) == before
+        assert _staging_dirs(idx.path) == []
+
+    def test_write_stage_runs_one_task_per_touched_bucket_up_to_cores(self, spark, idx):
+        ids = [f"p{i}" for i in range(6)]
+        touched = idx._buckets_of(ids)
+        assert len(touched) >= 2
+        for i in ids:
+            idx.upsert_item({"id": i, "vector": [2.0, 1.0]})
+        jobs = _run_in_group(spark, idx.commit)
+        tracker = spark.sparkContext.statusTracker()
+        final = max(tracker.getJobInfo(jobs[-1]).stageIds)
+        expected = min(len(touched), spark.sparkContext.defaultParallelism)
+        assert tracker.getStageInfo(final).numTasks == expected
+        assert idx.items().count() == 38
+
+
+def test_insert_then_upsert_of_existing_id_still_clashes(idx):
+    # an id first staged by insert_item stays an insert after the dedupe
+    idx.insert_item({"id": "k05", "vector": [1.0, 2.0]})
+    idx.upsert_item({"id": "k05", "vector": [3.0, 4.0]})
+    with pytest.raises(ValueError, match="already exists"):
+        idx.commit()
+    idx.cancel_update()
+
+
+_LAST_STAGED_WINS = """
+import shutil, sys, tempfile
+from pyspark.sql import SparkSession
+from vectra_py_spark.index import SparkVectorIndex
+
+for master in ("local[1]", "local[4]"):
+    spark = (
+        SparkSession.builder.master(master)
+        .config("spark.ui.enabled", "false")
+        .config("spark.sql.shuffle.partitions", "4")
+        .getOrCreate()
+    )
+    base = tempfile.mkdtemp()
+    ix = SparkVectorIndex(spark, base + "/idx", vector_dim=2, n_buckets=4)
+    ix.create()
+    for i in range(16):
+        ix.insert_item({"id": f"k{i}", "vector": [float(i), 1.0]})
+    ix.commit()
+    for i in range(16):
+        ix.upsert_item({"id": f"k{i}", "vector": [1.0, 0.0]})
+        ix.upsert_item({"id": f"k{i}", "vector": [0.0, float(i + 1)]})
+    ix.commit()
+    got = {r.id: r.vector for r in ix.items().collect()}
+    want = {f"k{i}": [0.0, float(i + 1)] for i in range(16)}
+    spark.stop()
+    shutil.rmtree(base)
+    if got != want:
+        sys.exit(f"{master}: {got}")
+"""
+
+
+def test_commit_keeps_last_staged_row_of_an_id_at_1_and_4_cores():
+    # a fresh process: the suite's session has one fixed master
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        [str(REPO), os.environ.get("PYTHONPATH", "")]
+    )}
+    proc = subprocess.run(
+        [sys.executable, "-c", _LAST_STAGED_WINS],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

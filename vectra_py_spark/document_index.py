@@ -12,9 +12,11 @@ vector index — as:
   with ``document_id/start_pos/end_pos`` as typed indexed columns
   (chunk metadata, ``custom_types.py:87-92``)
 
-Ingest (D5, §3.2) is ONE batch job per upsert batch:
-documents → splitter ``mapInPandas`` (T1–T4) → embedding ``mapInPandas``
-(E1/E3, token-budget batched A6) → norm (A1) → append to items.
+Ingest (D5, §3.2) runs the batch once: documents → splitter
+``mapInPandas`` (T1–T4) → embedding ``mapInPandas`` (E1/E3, token-budget
+batched A6) → norm (A1) → one partition-scoped MERGE into items. A batch
+costs 7 Spark jobs from a list and 8 from a DataFrame (see
+:meth:`SparkDocumentIndex.upsert_documents`).
 Query (D7, §3.3): embed query driver-side (E5) → V5 top-k-chunks,
 collected (≤ max_chunks rows) → group by document (A4) and mean score
 (A5) on the driver, like the reference → top documents (O2) → one
@@ -159,11 +161,20 @@ class SparkDocumentIndex:
 
     # -- D5: ingest -------------------------------------------------------
     def upsert_documents(self, docs: list[Mapping[str, Any]]) -> list[str]:
-        """Batch ingest: split → embed → norm → append, one Spark job.
+        """Batch ingest: split → embed → norm → MERGE into items.
 
         Each doc: ``{uri, text, doc_type?, metadata?}``. Re-upserting a
         known uri replaces its document row and chunks (the reference
         deletes-then-inserts, ``local_document_index.py:137-141``).
+
+        7 Spark jobs: the checkpoint of the staged rows (1), the
+        documents MERGE (2: its window exchange, then the write), the
+        split+embed checkpoint that also runs every batch check (2: the
+        splitter's spread exchange, then the checkpoint) and the chunk
+        MERGE (2). :meth:`upsert_documents_df` adds one exchange to its
+        checkpoint (the uri dedup), so 8. Replacing documents adds one
+        bucket probe for their old chunks unless the fresh chunks already
+        cover every bucket.
         """
         rows = []
         ids = []

@@ -22,11 +22,15 @@ commit — as a columnar Parquet table with declared schema (SURVEY.md
 
 Scale (100 TB): items live directory-partitioned by
 ``_bucket = pmod(xxhash64(id), n_buckets)``; the scan parallelizes per
-file split; scoring is codegen'd per partition; top-k merges k rows per
+file split; top-k merges k rows per
 partition on the driver. Metadata filters prune row groups via Parquet
 min/max stats on the typed columns. ``n_buckets`` is pinned in a
 ``_vectra_meta.json`` side-file at create time so every writer agrees
-on the id→bucket map for the table's lifetime.
+on the id→bucket map for the table's lifetime. A merge shuffles the
+touched buckets once, hash-partitioned by ``_bucket`` into
+``min(touched buckets, defaultParallelism)`` partitions, so its dedup
+window needs no second exchange and the touched bucket files are
+written by parallel tasks.
 
 DML is **partition-scoped** and writes each touched bucket once. A
 commit reads only the buckets holding touched ids (partition-pruned
@@ -123,13 +127,17 @@ def swap_in(spark: SparkSession, staging: str, moves: Mapping[str, str | None]) 
     directory with one rename; then the staging directory is removed.
     Deletions run before the first rename (see the module docstring for
     what a crash mid-swap leaves behind)."""
+    # one FileSystem for the whole swap: a rename cannot cross file
+    # systems, so every path in ``moves`` lives on the staging one
+    fs, jstaging = _fs_path(spark, staging)
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     order = sorted(moves.items(), key=lambda kv: kv[1] is not None)
     for live, staged in order:
-        fs, jlive = _fs_path(spark, live)
+        jlive = path(live)
         fs.delete(jlive, True)
-        if staged is not None and not fs.rename(_fs_path(spark, staged)[1], jlive):
+        if staged is not None and not fs.rename(path(staged), jlive):
             raise OSError(f"could not move {staged} to {live}")
-    discard_staging(spark, staging)
+    fs.delete(jstaging, True)
 
 
 def _metadata_resolver(df: DataFrame):
@@ -386,16 +394,21 @@ class SparkVectorIndex:
         Plain-Parquet MERGE equivalent of a Delta ``MERGE INTO``.
         ``touched`` holds the buckets of the staged ids and of the rows
         ``delete_cond`` may match; the caller computes it. Only those
-        buckets are read (``PartitionFilters`` prunes the rest); the
-        window-dedup ``row_number() over (partition by id order by is_new
-        desc) = 1`` (SURVEY.md §2.8 D2) merges them with ``staged``, which
-        carries an ``_insert`` flag per row. The result is written ONCE
-        to a staging directory (:func:`write_staging`); the same job
-        observes whether a surviving insert met an existing id, which
-        buckets changed (a row was deleted or a staged row landed there)
-        and which still hold rows. A clash, or a merge that changed nothing, discards the
-        staging write; otherwise the cached items frame is dropped and
-        each changed bucket is swapped in or, if it emptied, deleted
+        buckets are read (``PartitionFilters`` prunes the rest). With
+        ``staged`` rows (each carrying an ``_insert`` flag), the union is
+        hash-partitioned by ``_bucket`` into ``min(len(touched),
+        defaultParallelism)`` partitions — one exchange with an explicit
+        count, so AQE cannot coalesce the write into one task — and the
+        window-dedup ``row_number() over (partition by _bucket, id order
+        by is_new desc) = 1`` (SURVEY.md §2.8 D2) runs on it with no
+        second exchange. The result is written ONCE to a staging
+        directory (:func:`write_staging`); the same job observes whether
+        an id was staged twice, whether a surviving insert met an
+        existing id, which buckets changed (a row was deleted or a staged
+        row landed there) and which still hold rows. A duplicate, a
+        clash, or a merge that changed nothing discards the staging
+        write; otherwise the cached items frame is dropped and each
+        changed bucket is swapped in or, if it emptied, deleted
         (:func:`swap_in`). Untouched bucket files are never opened for
         read or write.
 
@@ -413,21 +426,27 @@ class SparkVectorIndex:
             .withColumn("_new", F.lit(0))
         )
         if staged is None:
-            rows = rows.withColumn("_clash", F.lit(False))
+            rows = rows.withColumn("_clash", F.lit(False)).withColumn("_dup", F.lit(False))
         else:
-            w_id = Window.partitionBy("id")
+            n_parts = min(len(touched), self.spark.sparkContext.defaultParallelism)
+            w_id = Window.partitionBy(BUCKET_COL, "id")
             rows = (
                 rows.withColumn("_insert", F.lit(False))
                 .unionByName(
                     staged.withColumn(BUCKET_COL, self._bucket_expr())
                     .withColumn("_new", F.lit(1))
                 )
+                # an explicit count, so AQE cannot coalesce the write to
+                # one task; the (_bucket, id) window reuses this exchange
+                .repartition(n_parts, BUCKET_COL)
                 # unique-insert check on the same window pass: an insert
                 # whose id group also holds a pre-existing row
                 .withColumn(
                     "_clash",
                     F.max("_insert").over(w_id) & (F.min("_new").over(w_id) == 0),
                 )
+                # an id staged twice (``commit()`` dedupes its own rows)
+                .withColumn("_dup", F.sum("_new").over(w_id) > 1)
                 .withColumn("_rn", F.row_number().over(w_id.orderBy(F.desc("_new"))))
                 .filter(F.col("_rn") == 1)
             )
@@ -443,6 +462,7 @@ class SparkVectorIndex:
         out = (
             rows.observe(
                 obs,
+                F.max("_dup").alias("dup"),
                 # a dropped row cannot clash: a delete staged beside an
                 # insert of the same id wins
                 F.max(F.col("_clash") & ~gone).alias("clash"),
@@ -457,6 +477,9 @@ class SparkVectorIndex:
         )
         staging = write_staging(out, self.path, partition_col=BUCKET_COL)
         m = obs.get
+        if m["dup"]:
+            discard_staging(self.spark, staging)
+            raise ValueError("merge_batch: duplicate id within batch")
         if m["clash"]:
             discard_staging(self.spark, staging)
             raise ValueError("insert_item: id already exists (unique=True)")
@@ -480,7 +503,9 @@ class SparkVectorIndex:
         """D4/S4: apply staged mutations in one partition-scoped MERGE.
 
         The touched buckets come from the staged and deleted ids alone
-        (:meth:`_buckets_of`), so no scan runs before the write.
+        (:meth:`_buckets_of`), so no scan runs before the write. An id
+        staged more than once is merged as its LAST staged row; it stays
+        an insert (must not exist yet) if any of its staged rows was one.
 
         Concurrency caveat: plain parquet has no transaction log, so
         this MERGE assumes a SINGLE writer per index (readers are fine —
@@ -496,11 +521,13 @@ class SparkVectorIndex:
             schema = T.StructType(
                 self._schema().fields + [T.StructField("_insert", T.BooleanType(), False)]
             )
+            inserted = {r["id"] for r in self._pending if r["_op"] == "insert"}
+            latest = {r["id"]: r for r in self._pending}  # last staged row wins
             staged = self.spark.createDataFrame(
                 [
                     {**{k: v for k, v in r.items() if k != "_op"},
-                     "_insert": r["_op"] == "insert"}
-                    for r in self._pending
+                     "_insert": i in inserted}
+                    for i, r in latest.items()
                 ],
                 schema,
             )
@@ -528,12 +555,14 @@ class SparkVectorIndex:
         this per micro-batch).
 
         ``df`` needs ``id`` and ``vector``; ``norm`` is (re)computed,
-        missing schema columns null-fill. Duplicate ids within the
-        batch are rejected (which row should win is undefined), as are
-        vectors of the wrong dimension — same ingest-time checks as the
-        row-at-a-time path. ``delete_cond`` additionally deletes matching
-        PRE-EXISTING rows in the same merge (document re-ingest drops the
-        replaced doc's old chunks this way).
+        missing schema columns null-fill. A NULL id and vectors of the
+        wrong dimension are rejected before anything is written: the
+        checkpoint job that pins the batch observes them. Duplicate ids
+        within the batch (which row should win is undefined) are caught
+        by the merge window (:meth:`_merge`), which discards its staging
+        write, so nothing is published either way. ``delete_cond``
+        additionally deletes matching PRE-EXISTING rows in the same merge
+        (document re-ingest drops the replaced doc's old chunks this way).
         """
         staged = df.withColumn("vector", F.col("vector").cast("array<double>"))
         staged = staged.withColumn("norm", l2_norm(F.col("vector")))
@@ -541,36 +570,35 @@ class SparkVectorIndex:
             if f.name not in staged.columns:
                 staged = staged.withColumn(f.name, F.lit(None).cast(f.dataType))
         staged = staged.select(*[f.name for f in self._schema().fields])
-        # Checkpoint BEFORE the validation job: the upstream pipeline
-        # (possibly split+embed with uuid() ids) runs once, and the
-        # validation and the merge see the same ids.
-        staged = staged.localCheckpoint(eager=True)
-        # ONE aggregate answers every validation over the checkpointed
-        # batch and yields the touched buckets: duplicates exist iff
-        # count != distinct ids; the batch is dimension-uniform iff
+        # Pin the batch: the upstream pipeline (possibly split+embed with
+        # uuid() ids) runs once, and the validation and the merge see the
+        # same ids. The checkpoint job itself observes every check and
+        # the staged rows' buckets. The batch is dimension-uniform iff
         # min==max of size(vector), which is exactly what "adopt the
         # first row's dim, then require every row to match it" accepted.
-        stats = staged.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("id").alias("n_ids"),
+        checked = Observation()
+        staged = staged.observe(
+            checked,
+            F.count_if(F.col("id").isNull()).alias("null_ids"),
             F.min(F.size("vector")).alias("d_min"),
             F.max(F.size("vector")).alias("d_max"),
             F.collect_set(self._bucket_expr()).alias("buckets"),
-        ).head()
-        if int(stats["n"] or 0):
-            if int(stats["n"]) != int(stats["n_ids"]):
-                raise ValueError("merge_batch: duplicate id within batch")
+        ).localCheckpoint(eager=True)
+        stats = checked.get
+        if stats["null_ids"]:
+            raise ValueError("merge_batch: NULL id in batch")
+        if stats["d_min"] is not None:  # min/max skip null vectors,
+            # matching the old per-row filter's null semantics
             dim = self._resolved_dim()
-            if stats["d_min"] is not None:  # min/max skip null vectors,
-                # matching the old per-row filter's null semantics
-                if dim is None:
-                    self.vector_dim = dim = int(stats["d_min"])
-                if int(stats["d_min"]) != dim or int(stats["d_max"]) != dim:
-                    raise ValueError(
-                        f"merge_batch: vector dimension != index dim {dim}"
-                    )
+            if dim is None:
+                self.vector_dim = dim = int(stats["d_min"])
+            if int(stats["d_min"]) != dim or int(stats["d_max"]) != dim:
+                raise ValueError(
+                    f"merge_batch: vector dimension != index dim {dim}"
+                )
         touched = set(stats["buckets"])
-        if delete_cond is not None:
+        # the probe cannot add a bucket once the batch covers all of them
+        if delete_cond is not None and len(touched) < self.n_buckets:
             touched |= self._buckets_where(delete_cond)
         self._merge(
             staged.withColumn("_insert", F.lit(False)),
