@@ -285,22 +285,31 @@ def pq_encode(
     int64 fixed-point values), embarrassingly parallel, no shuffle.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from vectra_py_spark.operators.similarity import (
+        _arrow_out,
+        _batch,
+        _decode,
+    )
 
     m = len(codebook)
     ks = len(codebook[0])
     dsub = len(codebook[0][0])
     cb = np.asarray(codebook, dtype="int64")  # (m, ks, dsub)
-    id_type = df.schema[id_col].dataType.simpleString()
+    schema, arrow = _arrow_out(
+        ("id", df.schema[id_col].dataType),
+        ("codes", T.ArrayType(T.IntegerType())),
+    )
 
     def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
+        for b in batches:
+            n = b.num_rows
             X = _scale_to_int(
-                np.asarray(list(pdf[vector_col]), dtype="float64")
-            ).reshape(len(pdf), m, dsub)
-            codes = np.empty((len(pdf), m), dtype="int32")
+                _decode(b.column(vector_col), "pq_encode")
+            ).reshape(n, m, dsub)
+            codes = np.empty((n, m), dtype="int32")
             for s in range(m):
                 # (n, ks) exact int64 distances; argmin takes the FIRST
                 # minimum — the lowest code id, same as the SQL twin's
@@ -309,12 +318,16 @@ def pq_encode(
                     axis=2
                 )
                 codes[:, s] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {"id": pdf[id_col], "codes": list(codes)}
+            yield _batch(
+                arrow,
+                b.column(id_col),
+                pa.ListArray.from_arrays(
+                    np.arange(0, n * m + 1, m, dtype="int32"), codes.ravel()
+                ),
             )
 
-    return spread(df.select(id_col, vector_col)).mapInPandas(
-        gen, schema=f"id {id_type}, codes array<int>"
+    return spread(df.select(id_col, vector_col)).mapInArrow(
+        gen, schema
     ).withColumnRenamed("id", id_col)
 
 

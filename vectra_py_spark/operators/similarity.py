@@ -21,6 +21,18 @@ LSH-bucketed ANN (SURVEY.md §2.3 V8, BASELINE.json north star).
 shuffles on (bucket) with AQE skew splitting; signatures are one narrow
 projection. For repeated top-k serving, pre-bucket + Parquet
 partitioning by bucket prefix gives partition pruning per query.
+
+Every brute-force matmul operator (:func:`cosine_topk_batch`, the
+``matmul`` :func:`cosine_similarity_join`, :func:`semantic_dedup`'s
+within-cell prune and the :func:`margin_bitext_mine` k-NN pass) runs one
+Arrow-native kernel: ``_decode`` (a ``RecordBatch`` list column to an
+``(n, d)`` float64 matrix, refusing NULL or ragged vectors) → ``_unit``
+(rows over their norms, a zero norm divides by 1.0) → ``_sim_blocks``
+(row blocks of ``a @ b.T`` capped at ``_BLOCK_ELEMS`` entries, rounded
+half away from zero at 6 dp) → the operator's own reducer. Broadcast
+sides reach the driver through one streamed collect (``_collect_unit``),
+and every Python producer emits batches typed from its declared Spark
+schema (``_arrow_out`` / ``_batch``).
 """
 
 from __future__ import annotations
@@ -28,9 +40,11 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from vectra_py_spark.functions.vector import (
     cosine_to_query,
@@ -82,7 +96,146 @@ def _round_half_away(a: "np.ndarray", dp: int = _DP) -> "np.ndarray":
     on a 6-dp half tie could cross the threshold on one engine/strategy
     and not the other, breaking the advertised strategy equivalence."""
     f = 10.0 ** dp
-    return np.sign(a) * np.floor(np.abs(a) * f + 0.5) / f
+    a = np.asarray(a, dtype=np.float64)
+    out = np.abs(a, out=np.empty_like(a))  # two arrays, not seven
+    out *= f
+    out += 0.5
+    np.floor(out, out=out)
+    out *= np.sign(a)
+    out /= f
+    return out[()]  # a scalar for a scalar input
+
+
+# ---------------------------------------------------------------------------
+# The brute-force cosine kernel: decode → unit → rounded blocks → reducer
+# ---------------------------------------------------------------------------
+_BLOCK_ELEMS = 4_000_000  # similarity entries per block (32 MB of float64)
+_COLLECT_CHUNK = 8192  # rows of driver-side buffer per Arrow conversion
+
+
+def _decode(col: "pa.Array | pa.ChunkedArray", op: str) -> np.ndarray:
+    """An Arrow ``list<float|double>`` column as an ``(n, d)`` float64
+    matrix: the flattened values buffer reshaped, with no per-row copy
+    (a float32 column pays one cast). A NULL vector, a NULL element or
+    vectors of different lengths raise a ``ValueError`` naming ``op``,
+    instead of an opaque numpy error or a silently NaN score."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    lens = np.diff(col.offsets.to_numpy())
+    d = int(lens[0]) if n else 0
+    flat = col.flatten()
+    if col.null_count or flat.null_count or (lens != d).any():
+        found = (
+            "a NULL vector" if col.null_count
+            else "a NULL element" if flat.null_count
+            else f"lengths {lens.min()}..{lens.max()}"
+        )
+        raise ValueError(
+            f"{op}: the vector column must hold non-NULL vectors of one "
+            f"dimension (found {found})"
+        )
+    return flat.to_numpy().astype(np.float64, copy=False).reshape(n, d)
+
+
+def _unit(m: np.ndarray) -> np.ndarray:
+    """Rows divided by their L2 norms. A zero-norm row keeps a divisor
+    of 1.0, so it scores cosine 0.0 against everything (never 0/0)."""
+    norms = np.linalg.norm(m, axis=1)
+    norms[norms == 0.0] = 1.0
+    return m / norms[:, None]
+
+
+def _sim_blocks(a: np.ndarray, b: np.ndarray):
+    """Yield ``(start, sim)`` over row blocks of ``a @ b.T``, each at
+    most ``_BLOCK_ELEMS`` entries and rounded half away from zero at
+    6 dp: the memory bound is per block, not per batch or group."""
+    step = max(1, _BLOCK_ELEMS // max(len(b), 1))
+    for s in range(0, len(a), step):
+        yield s, _round_half_away(a[s : s + step] @ b.T)
+
+
+def _rank_cut(group: np.ndarray, key: np.ndarray, score: np.ndarray,
+              k: int) -> np.ndarray:
+    """Indices of the first ``k`` rows of each group in
+    ``(group, score desc, key)`` order, returned in that order."""
+    order = np.lexsort((key, -score, group))
+    g = group[order]
+    start = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+    rank = np.arange(len(g)) - np.repeat(start, np.diff(np.r_[start, len(g)]))
+    return order[rank < k]
+
+
+def _top_k(sim: np.ndarray, key: np.ndarray, k: int):
+    """Per row of ``sim``: the ``k`` columns with the highest score, ties
+    broken by the smaller ``key[col]``. Returns ``(rows, cols)`` in
+    ``(row, score desc, key)`` order.
+
+    A plain argpartition on ROUNDED scores would break a tie at the
+    k-th place arbitrarily, so every column tied with the k-th score
+    is a candidate and :func:`_rank_cut` orders the candidates exactly."""
+    n = sim.shape[1]
+    take = min(k, n)
+    part = np.array(sim, order="C")
+    part.partition(n - take, axis=1)
+    rows, cols = np.divmod(
+        np.flatnonzero(sim >= part[:, n - take, None]), n
+    )
+    keep = _rank_cut(rows, key[cols], sim[rows, cols], k)
+    return rows[keep], cols[keep]
+
+
+def _arrow_out(*fields: "tuple[str, T.DataType]"):
+    """A Python producer's declared Spark schema and the Arrow schema
+    its batches are built with, from one field list so they cannot
+    drift apart."""
+    schema = T.StructType([T.StructField(n, t) for n, t in fields])
+    return schema, to_arrow_schema(schema)
+
+
+def _batch(schema: pa.Schema, *cols) -> pa.RecordBatch:
+    """One output batch typed exactly as ``schema`` (numpy or Arrow
+    columns, cast where needed)."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+
+
+def _collect_unit(df: DataFrame, op: str):
+    """Stream ``df`` (scalar columns, then one vector column) to the
+    driver: one int64 array per scalar column, then the unit-row matrix.
+
+    Rows arrive through ``toLocalIterator`` and are converted to Arrow
+    every ``_COLLECT_CHUNK`` rows, so the driver holds the arrays
+    (bounded by the broadcast budget the callers enforce) plus one chunk
+    of Rows, never a corpus-sized Row list (a Row of 64 Python floats is
+    ~25 bytes/value against 8 in the array)."""
+    n_scalar = len(df.columns) - 1
+    vtype = pa.list_(pa.float64())
+    scalars: list = [[] for _ in range(n_scalar)]
+    vecs: list = []
+    buf: list = []
+
+    def flush():
+        cols = list(zip(*buf))
+        for acc, c in zip(scalars, cols):
+            acc.append(np.array(c, dtype=np.int64))
+        vecs.append(pa.array(cols[-1], type=vtype))
+        buf.clear()
+
+    for row in df.toLocalIterator(prefetchPartitions=True):
+        buf.append(row)
+        if len(buf) >= _COLLECT_CHUNK:
+            flush()
+    if buf:
+        flush()
+    mat = _decode(pa.chunked_array(vecs, type=vtype), op)
+    return (
+        *(np.concatenate(c) if c else np.zeros(0, dtype=np.int64)
+          for c in scalars),
+        _unit(mat),
+    )
 
 
 def _lcg_doubles(n: int, seed: int) -> list[float]:
@@ -193,88 +346,59 @@ def cosine_topk_batch(
 ) -> DataFrame:
     """Exact top-k for a BATCH of query vectors in one job.
 
-    The per-query cost of a literal-vector plan is dominated by
-    analysis + codegen (~180 ms hot on local[32]); serving Q queries as
-    one broadcast matrix amortizes that to one matmul block per Arrow
-    batch (N×d @ d×Q) + per-partition partial top-k, then one narrow
-    shuffle on query_id for the global top-k. At 100 TB this is the
-    pattern for offline retrieval: thousands of queries per pass over
-    the items table instead of thousands of passes.
+    Serving Q queries as one broadcast matrix amortizes the per-plan
+    analysis cost of a literal-vector query to one matmul block per
+    Arrow batch (N×d @ d×Q) + a per-batch partial top-k, then one
+    round-robin exchange into a single task for the global top-k. At
+    100 TB this is the pattern for offline retrieval: thousands of
+    queries per pass over the items table instead of thousands of
+    passes.
 
     The matmul stage runs at the INPUT's partitioning — no ``spread()``:
     big file sources arrive pre-split by ``maxPartitionBytes``, and a
     serving deployment picks its cache layout deliberately (≈50k rows
     per partition keeps each BLAS block ~25 MB at dim 64). Forcing a
     fan-out exchange here costs more than the matmul it parallelizes
-    whenever the table is small enough that per-task overhead dominates
-    (measured 5.1 → 1.9 ms/query at sf0.1 by dropping it), and at scale
-    it would re-shuffle data the scan already split correctly.
+    whenever the table is small enough that per-task overhead dominates,
+    and at scale it would re-shuffle data the scan already split
+    correctly.
 
     Output: (query_id, id_col, score) — exact cosine, ties broken by id.
     """
-    Q = np.array([[float(x) for x in q] for q in queries], dtype=np.float64)
-    qn = np.linalg.norm(Q, axis=1)
-    qn[qn == 0.0] = 1.0
-    Qu = Q / qn[:, None]
+    Qu = _unit(np.array([[float(x) for x in q] for q in queries],
+                        dtype=np.float64))
     bc = df.sparkSession.sparkContext.broadcast(Qu)
-    nq = Q.shape[0]
+    schema, arrow = _arrow_out(
+        ("query_id", T.IntegerType()),
+        (id_col, T.LongType()),
+        ("score", T.DoubleType()),
+    )
 
     def block(batches):
         Qmat = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            M = np.array(list(pdf[vector_col]), dtype=np.float64)
-            mn = np.linalg.norm(M, axis=1)
-            mn[mn == 0.0] = 1.0
-            sim = _round_half_away((M / mn[:, None]) @ Qmat.T)  # n×Q
-            take = min(k, len(ids))
-            out_q, out_id, out_s = [], [], []
-            for qi in range(Qmat.shape[0]):
-                col = sim[:, qi]
-                # exact (score DESC, id ASC) partial top-k: a plain
-                # argpartition on the ROUNDED score breaks boundary
-                # ties arbitrarily, which can drop the smaller-id row
-                # the global contract (and the oracle) requires before
-                # the finisher sees it. Select every row tied with the
-                # take-th score, then order the candidate set exactly.
-                kth = np.partition(col, len(col) - take)[len(col) - take]
-                cand = np.flatnonzero(col >= kth)
-                cand = cand[np.lexsort((ids[cand], -col[cand]))][:take]
-                out_q.extend([qi] * take)
-                out_id.extend(ids[cand])
-                out_s.extend(col[cand])
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_id, "score": out_s}
-            )
+        for b in batches:
+            ids = b.column(id_col).to_numpy()
+            unit = _unit(_decode(b.column(vector_col), "cosine_topk_batch"))
+            for s, sim in _sim_blocks(unit, Qmat):
+                q, r = _top_k(sim.T, ids[s : s + len(sim)], k)
+                yield _batch(arrow, q, ids[s + r], sim[r, q])
 
-    schema = f"query_id INT, {id_col} BIGINT, score DOUBLE"
-    partial = df.select(id_col, vector_col).mapInPandas(
-        block, schema=schema
-    )
-
-    # Global top-k finisher: the survivor set is k·Q·partitions rows, so
-    # ONE round-robin exchange into one pandas task replaces the window
-    # exchange + global-sort exchange (measured 21% off the amortized
-    # per-query wall; identical rows). At cluster scale k·Q·P still fits
-    # one task by construction (it is the serving response payload).
+    # Global top-k finisher: the survivor set is k·Q·batches rows, so
+    # ONE round-robin exchange into one task replaces a window exchange
+    # + a global-sort exchange. At cluster scale it still fits one task
+    # by construction (it is the serving response payload).
     def finish(batches):
-        # mapInPandas may yield zero batches (empty corpus) — guard
-        # BEFORE concat, which raises on an empty list
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if not len(pdf):
-            yield pdf
-            return
-        pdf = pdf.sort_values(
-            ["query_id", "score", id_col], ascending=[True, False, True]
-        )
-        yield pdf.groupby("query_id", sort=True).head(k)
+        t = pa.Table.from_batches(list(batches), schema=arrow)
+        q, ids, score = (c.to_numpy() for c in t.columns)
+        keep = _rank_cut(q, ids, score, k)
+        yield _batch(arrow, q[keep], ids[keep], score[keep])
 
-    return partial.repartition(1).mapInPandas(finish, schema=schema)
+    return (
+        df.select(id_col, vector_col)
+        .mapInArrow(block, schema)
+        .repartition(1)
+        .mapInArrow(finish, schema)
+    )
 
 
 def cosine_topk_batch_sql(
@@ -317,11 +441,13 @@ def cosine_similarity_join(
     else ``hof``. The default call path never collects an unbounded
     vector set to the driver.
 
-    ``matmul``: broadcast the full id+unit-vector matrix (8 KB/vector at
-    d=64 → ~1M vectors fit comfortably) and compute block × matrixᵀ with
-    numpy inside ``mapInPandas``. This is the N×M case where an
-    Arrow-batched BLAS matmul beats codegen'd per-pair HOF dots by ~50×
-    (measured: 87 s → <2 s at N=2000).
+    ``matmul``: stream the id+unit-vector matrix to the driver and
+    broadcast it (512 B/vector at d=64: the default 256 MB budget holds
+    ~500k vectors), then compute block × matrixᵀ with numpy inside
+    ``mapInArrow``. This is the N×M case where an Arrow-batched BLAS
+    matmul beats the per-pair HOF cosine, which Spark evaluates
+    interpreted (the higher-order functions are ``CodegenFallback``), by
+    ~50× (measured: 87 s → <2 s at N=2000).
 
     ``hof``: pure-Catalyst cross join with HOF cosine — no Python, no
     broadcast; the oracle-identical, fully distributed path. Exact
@@ -362,40 +488,32 @@ def cosine_similarity_join(
             .select("id_a", "id_b", "cosine")
         )
 
-    rows = df.select(id_col, vector_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    unit = mat / norms[:, None]
-    bc = df.sparkSession.sparkContext.broadcast((ids, unit))
+    bc = df.sparkSession.sparkContext.broadcast(
+        _collect_unit(df.select(id_col, vector_col), "cosine_similarity_join")
+    )
+    schema, arrow = _arrow_out(
+        ("id_a", T.LongType()), ("id_b", T.LongType()),
+        ("cosine", T.DoubleType()),
+    )
 
     def block(batches):
         b_ids, b_unit = bc.value
-        for pdf in batches:
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            a_mat = np.array(list(pdf[vector_col]), dtype=np.float64)
-            a_norms = np.linalg.norm(a_mat, axis=1)
-            a_norms[a_norms == 0.0] = 1.0
-            a_unit = a_mat / a_norms[:, None]
-            # sub-block to bound the similarity matrix in memory
-            step = max(1, 4_000_000 // max(len(b_ids), 1))
-            for s in range(0, len(a_ids), step):
-                sim_blk = _round_half_away(a_unit[s : s + step] @ b_unit.T)
-                ii, jj = np.where(sim_blk >= threshold)
+        for b in batches:
+            a_ids = b.column(id_col).to_numpy()
+            a_unit = _unit(
+                _decode(b.column(vector_col), "cosine_similarity_join")
+            )
+            for s, sim in _sim_blocks(a_unit, b_unit):
+                ii, jj = np.divmod(
+                    np.flatnonzero(sim >= threshold), sim.shape[1]
+                )
                 ia, jb = a_ids[s + ii], b_ids[jj]
                 keep = ia < jb
-                yield pd.DataFrame(
-                    {
-                        "id_a": ia[keep],
-                        "id_b": jb[keep],
-                        "cosine": sim_blk[ii[keep], jj[keep]],
-                    }
+                yield _batch(
+                    arrow, ia[keep], jb[keep], sim[ii[keep], jj[keep]]
                 )
 
-    return spread(df.select(id_col, vector_col)).mapInPandas(
-        block, schema="id_a BIGINT, id_b BIGINT, cosine DOUBLE"
-    )
+    return spread(df.select(id_col, vector_col)).mapInArrow(block, schema)
 
 
 def cosine_similarity_join_sql(
@@ -453,68 +571,46 @@ def lsh_similarity_join(
     ~1.0 at near-dup thresholds. A single-table design (the naive
     construction) has ~2% recall at τ=0.4 — measured, not theoretical.
 
-    Plan shape (measured 11.7 s → ~3 s at sf0.1):
+    Plan shape:
 
-    - **signatures** via a broadcast join against a tiny
-      (tbl, bit, plane) table + partial-agg bit packing — the per-plane
-      dot is the SAME left-to-right HOF as the oracle, but on columns,
-      so the plan carries 36 rows instead of ~2,300 inlined literals
-      (literal blow-up made Catalyst codegen compile dominate runtime).
+    - **signatures** in one narrow ``mapInArrow`` pass: all b·L plane
+      dots per row from a numpy loop over dimensions, summed in the same
+      left-to-right order as the HOF/oracle dot, so bucket signs agree
+      bit for bit across engines.
     - **candidates** equi-join on one packed int key
       ``tbl·2^b + bucket``; ids only — vectors never ride the banding
       explode (the 100 TB shuffle hazard); AQE splits skewed buckets.
     - **verify** ``auto`` (default): size-aware — ``broadcast`` (id→
-      unit-vector matrix broadcast once, candidates stream through
-      ``mapInPandas`` with np fancy-index + row dot — no join, no
-      per-pair array shipping) while the vector set fits the driver
-      budget (:data:`BROADCAST_BYTES_CONF`); past it, ``join`` (two hash
-      joins + pair-cosine pandas_udf — the beyond-one-executor path at
-      100 TB). Both verify paths are equivalence-tested; the default
-      call path never collects an unbounded vector set.
+      unit-vector matrix streamed to the driver and broadcast once,
+      candidates stream through ``mapInArrow`` with np fancy-index +
+      row dot — no join, no per-pair array shipping) while the vector
+      set fits the driver budget (:data:`BROADCAST_BYTES_CONF`); past
+      it, ``join`` (two hash joins + a pair-cosine ``arrow_udf`` — the
+      beyond-one-executor path at 100 TB). Both verify paths are
+      equivalence-tested; the default call path never collects an
+      unbounded vector set.
     """
     verify = resolve_similarity_strategy(
         df, verify, vector_col, small="broadcast", large="join"
     )
-    spark = df.sparkSession
     planes = seeded_hyperplanes(dim, bits_per_table * n_tables, seed)
-    # Signatures in ONE vectorized pass (guide §4.2): all b·L plane
-    # dots per row from a numpy loop over dimensions, replacing the
-    # broadcast-join row explode (×b·L rows) + interpreted HOF dot +
-    # partial-agg bit packing + a (vid, tbl) exchange. The fold is
-    # BIT-IDENTICAL to the HOF/oracle arithmetic: products first
-    # (x·y per dimension, doubles), then a left-to-right sum in
-    # dimension order — ``acc = (acc + p_i)`` per element, the exact
-    # IEEE sequence ``aggregate(zip_with(vec, plane, *), 0.0, +)``
+    # The signature fold is BIT-IDENTICAL to the HOF/oracle arithmetic:
+    # products first (x·y per dimension, doubles), then a left-to-right
+    # sum in dimension order — ``acc = (acc + p_i)`` per element, the
+    # exact IEEE sequence ``aggregate(zip_with(vec, plane, *), 0.0, +)``
     # executes — so bucket signs can never diverge cross-engine.
-    # Measured 4.2 s → ~2 s for lsh_neardup_strict at sf0.1; one
-    # exchange fewer in the plan.
     planes_arr = np.array(planes, dtype=np.float64)  # (b·L, dim)
     n_planes, pdim = planes_arr.shape
     bits = bits_per_table
     tbl_base = (np.arange(n_planes) // bits) * (1 << bits)
     bit_vals = 1 << (np.arange(n_planes) % bits)
+    sig_schema, sig_arrow = _arrow_out(
+        ("vid", df.schema[id_col].dataType), ("key", T.IntegerType())
+    )
 
     def _signatures(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # cheap dim guard (VERDICT r12): on RAGGED vectors
-            # np.array would build an object array / raise an opaque
-            # numpy error mid-stage; upstream contracts make ragged
-            # input unlikely, so refuse it explicitly instead of
-            # miscomputing (one len() per row — trivial next to the
-            # b·L plane dots per row)
-            lens = np.fromiter(
-                (len(v) for v in pdf["vec"]), dtype=np.int64,
-                count=len(pdf),
-            )
-            if len(lens) and lens.min() != lens.max():
-                raise ValueError(
-                    "lsh_similarity_join: ragged vector column "
-                    f"(lengths {lens.min()}..{lens.max()}); all "
-                    "vectors must share one dimension"
-                )
-            V = np.array(list(pdf["vec"]), dtype=np.float64)
+        for b in batches:
+            V = _decode(b.column("vec"), "lsh_similarity_join")
             acc = np.zeros((len(V), n_planes))
             for i in range(min(pdim, V.shape[1])):
                 acc = acc + V[:, i][:, None] * planes_arr[None, :, i]
@@ -523,19 +619,13 @@ def lsh_similarity_join(
             for t in range(n_planes // bits):
                 keys[:, t] = packed[:, t * bits:(t + 1) * bits].sum(axis=1)
             keys += tbl_base[::bits][None, :]
-            ids = pdf["vid"].to_numpy()
-            yield pd.DataFrame({
-                "vid": np.repeat(ids, n_planes // bits),
-                "key": keys.ravel().astype(np.int32),
-            })
+            rows = np.repeat(np.arange(len(V)), n_planes // bits)
+            yield _batch(sig_arrow, b.column("vid").take(rows), keys.ravel())
 
-    vid_dt = dict(df.dtypes)[id_col]  # preserve the caller's id dtype
     base = spread(
         df.select(F.col(id_col).alias("vid"), F.col(vector_col).alias("vec"))
     )
-    sig = base.mapInPandas(
-        _signatures, schema=f"vid {vid_dt}, key INT"
-    ).cache()
+    sig = base.mapInArrow(_signatures, sig_schema).cache()
     a = sig.select(F.col("vid").alias("id_a"), "key")
     b = sig.select(F.col("vid").alias("id_b"), "key")
     cand = (
@@ -550,14 +640,14 @@ def lsh_similarity_join(
         vb = df.select(F.col(id_col).alias("id_b"), F.col(vector_col).alias("vb"))
         pairs = cand.join(va, "id_a").join(vb, "id_b")
 
-        @F.pandas_udf("double")
-        def _pair_cosine(va_s: pd.Series, vb_s: pd.Series) -> pd.Series:
-            A = np.array(list(va_s), dtype=np.float64)
-            B = np.array(list(vb_s), dtype=np.float64)
-            num = np.einsum("ij,ij->i", A, B)
-            den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            den[den == 0.0] = 1.0
-            return pd.Series(num / den)
+        # the same unit rows and row dot as the broadcast verify below
+        @F.arrow_udf("double")
+        def _pair_cosine(va_s: pa.Array, vb_s: pa.Array) -> pa.Array:
+            return pa.array(np.einsum(
+                "ij,ij->i",
+                _unit(_decode(va_s, "lsh_similarity_join")),
+                _unit(_decode(vb_s, "lsh_similarity_join")),
+            ))
 
         return (
             pairs.withColumn("cosine", F.round(_pair_cosine("va", "vb"), _DP))
@@ -565,42 +655,16 @@ def lsh_similarity_join(
             .select("id_a", "id_b", "cosine")
         )
 
-    # streamed like _collect_unit_broadcast (VERDICT r12 item 9): the
-    # driver holds the numpy arrays (budget-bounded via the strategy
-    # resolution above) plus one chunk of Rows, not the whole vector
-    # set as Rows; then sorted by id for the searchsorted probe
-    it = df.select(id_col, vector_col).toLocalIterator(
-        prefetchPartitions=True
+    # sorted by id for the searchsorted probe
+    ids, unit = _collect_unit(
+        df.select(id_col, vector_col), "lsh_similarity_join"
     )
-    id_chunks: list = []
-    mat_chunks: list = []
-    buf_i: list = []
-    buf_v: list = []
-    for r in it:
-        buf_i.append(r[0])
-        buf_v.append(r[1])
-        if len(buf_i) >= _COLLECT_CHUNK:
-            id_chunks.append(np.array(buf_i, dtype=np.int64))
-            mat_chunks.append(np.array(buf_v, dtype=np.float64))
-            buf_i, buf_v = [], []
-    if buf_i:
-        id_chunks.append(np.array(buf_i, dtype=np.int64))
-        mat_chunks.append(np.array(buf_v, dtype=np.float64))
-    ids = (
-        np.concatenate(id_chunks)
-        if id_chunks
-        else np.zeros(0, dtype=np.int64)
-    )
-    mat = (
-        np.vstack(mat_chunks)
-        if mat_chunks
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    unit = mat / norms[:, None]
     order = np.argsort(ids)
-    bc = spark.sparkContext.broadcast((ids[order], unit[order]))
+    bc = df.sparkSession.sparkContext.broadcast((ids[order], unit[order]))
+    schema, arrow = _arrow_out(
+        ("id_a", T.LongType()), ("id_b", T.LongType()),
+        ("cosine", T.DoubleType()),
+    )
 
     # A pair colliding in several tables appears several times; verifying
     # the duplicates is a few vectorized flops each, so the winning plan
@@ -609,24 +673,18 @@ def lsh_similarity_join(
     # the full multi-million-row candidate stream.
     def check(batches):
         s_ids, s_unit = bc.value
-        for pdf in batches:
-            ia = np.searchsorted(s_ids, pdf["id_a"].to_numpy(dtype=np.int64))
-            ib = np.searchsorted(s_ids, pdf["id_b"].to_numpy(dtype=np.int64))
-            cos = _round_half_away(
-                np.einsum("ij,ij->i", s_unit[ia], s_unit[ib])
-            )
+        for b in batches:
+            id_a = b.column("id_a").to_numpy()
+            id_b = b.column("id_b").to_numpy()
+            cos = _round_half_away(np.einsum(
+                "ij,ij->i",
+                s_unit[np.searchsorted(s_ids, id_a)],
+                s_unit[np.searchsorted(s_ids, id_b)],
+            ))
             keep = cos >= threshold
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].to_numpy()[keep],
-                    "id_b": pdf["id_b"].to_numpy()[keep],
-                    "cosine": cos[keep],
-                }
-            )
+            yield _batch(arrow, id_a[keep], id_b[keep], cos[keep])
 
-    return cand.mapInPandas(
-        check, schema="id_a BIGINT, id_b BIGINT, cosine DOUBLE"
-    ).distinct()
+    return cand.mapInArrow(check, schema).distinct()
 
 
 def _seq_dot(a: Sequence[float], b: Sequence[float]) -> float:
@@ -1272,7 +1330,7 @@ def semantic_dedup(
     neighborhood) and SQL-expressible, which is what the oracle checks.
 
     ``strategy="matmul"`` (default): one shuffle on cell
-    (``applyInPandas``), then a blocked unit-matrix BLAS product per
+    (``applyInArrow``), then a blocked unit-matrix BLAS product per
     cell — each pair costs one fused multiply row, vs three 64-element
     HOF aggregates per pair for the ``"join"`` formulation (measured
     6.5× on the sf0.1 fixture). ``"join"``: the pure-Catalyst same-cell
@@ -1295,26 +1353,24 @@ def semantic_dedup(
     withc = df.withColumn("cell", cell_assignment_expr(centroids, vector_col))
 
     if strategy == "matmul":
-        def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("__id").reset_index(drop=True)
-            ids = pdf["__id"].to_numpy()
-            M = np.array(list(pdf["__vec"]), dtype=np.float64)
-            nrm = np.linalg.norm(M, axis=1)
-            nrm[nrm == 0.0] = 1.0
-            U = M / nrm[:, None]
-            m = len(ids)
+        schema, arrow = _arrow_out(("did", withc.schema[id_col].dataType))
+
+        def prune(table: pa.Table) -> pa.Table:
+            table = table.sort_by("__id")
+            U = _unit(_decode(table.column("__vec"), "semantic_dedup"))
+            m = len(U)
             dropped = np.zeros(m, dtype=bool)
-            step = max(1, 4_000_000 // max(m, 1))
             cols = np.arange(m)
-            for s in range(0, m, step):
-                e = min(s + step, m)
-                sim = _round_half_away(U[s:e] @ U.T)  # block rows = droppees
+            for s, sim in _sim_blocks(U, U):  # block rows = droppees
+                e = s + len(sim)
                 # earlier neighbor: any column j < row index with sim≥τ
                 earlier = cols[None, :] < np.arange(s, e)[:, None]
                 dropped[s:e] = ((sim >= threshold) & earlier).any(axis=1)
-            return pd.DataFrame({"did": ids[dropped]})
+            ids = table.column("__id").combine_chunks()
+            return pa.Table.from_batches(
+                [_batch(arrow, ids.filter(pa.array(dropped)))]
+            )
 
-        id_type = withc.schema[id_col].dataType.simpleString()
         dropped_df = (
             withc.select(
                 F.col("cell"),
@@ -1322,7 +1378,7 @@ def semantic_dedup(
                 F.col(vector_col).alias("__vec"),
             )
             .groupBy("cell")
-            .applyInPandas(prune, schema=f"did {id_type}")
+            .applyInArrow(prune, schema)
         )
     else:
         # norms once per row BEFORE the pair join (not per pair)
@@ -1645,52 +1701,39 @@ def _knn_pass(scan_df, bc, k, id_col, vector_col, scan_is_src,
               spread_target: int | None = None):
     """One broadcast matmul pass: for every row of ``scan_df``, cosine
     against the broadcast matrix, keep the k-NN (rounded cos, id
-    tie-break) and the neighborhood mean. Values are row-independent,
+    tie-break) and the neighborhood sum. Values are row-independent,
     so ``spread_target`` (partitioning) can never change the output —
     it only sizes the per-task matmul blocks."""
+    schema, arrow = _arrow_out(
+        ("this_id", T.LongType()), ("other_id", T.LongType()),
+        ("cosine", T.DoubleType()), ("nn_sum", T.LongType()),
+        ("nn_k", T.LongType()),
+    )
 
     def run(batches):
         o_ids, o_unit = bc.value
         kk = min(k, len(o_ids))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            s_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vector_col]), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            norms[norms == 0.0] = 1.0
-            unit = mat / norms[:, None]
-            step = max(1, 4_000_000 // max(len(o_ids), 1))
-            for s in range(0, len(s_ids), step):
-                sim = _round_half_away(unit[s : s + step] @ o_unit.T)
-                # k-NN by (cos desc, other-id asc): lexsort on
-                # (-cos, id) gives exactly the window order
-                order = np.lexsort((o_ids[None, :].repeat(len(sim), 0),
-                                    -sim), axis=1)[:, :kk]
-                rows_idx = np.arange(len(sim))[:, None].repeat(kk, 1)
-                top_cos = sim[rows_idx, order]
-                top_ids = o_ids[order]
+        if not kk:  # an empty other side: no neighbours, no candidates
+            return
+        for b in batches:
+            s_ids = b.column(id_col).to_numpy()
+            unit = _unit(_decode(b.column(vector_col), "margin_bitext_mine"))
+            for s, sim in _sim_blocks(unit, o_unit):
+                r, c = _top_k(sim, o_ids, kk)
+                top_cos = sim[r, c]
                 # neighborhoods as EXACT integer sums of the 1e6-scaled
                 # cosines — see _margin_candidates_hof / _margin_expr
                 nn_sum = np.rint(top_cos * 10.0 ** _DP).astype(
                     np.int64
-                ).sum(axis=1)
-                this = np.repeat(s_ids[s : s + step], kk)
-                yield pd.DataFrame({
-                    "this_id": this,
-                    "other_id": top_ids.ravel(),
-                    "cosine": top_cos.ravel(),
-                    "nn_sum": np.repeat(nn_sum, kk),
-                    "nn_k": np.full(len(this), kk, dtype=np.int64),
-                })
+                ).reshape(len(sim), kk).sum(axis=1)
+                yield _batch(
+                    arrow, s_ids[s + r], o_ids[c], top_cos,
+                    np.repeat(nn_sum, kk), np.full(len(r), kk),
+                )
 
     out = spread(
         scan_df.select(id_col, vector_col), target=spread_target
-    ).mapInPandas(
-        run,
-        schema=("this_id BIGINT, other_id BIGINT, "
-                "cosine DOUBLE, nn_sum BIGINT, nn_k BIGINT"),
-    )
+    ).mapInArrow(run, schema)
     if scan_is_src:
         return out.select(
             F.col("this_id").alias("id_src"),
@@ -1827,66 +1870,14 @@ def margin_bitext_mine(
         return _margin_select(
             fwd, bwd, fwd_mean, bwd_mean, direction, threshold
         )
+    sc = src.sparkSession.sparkContext
     return _mine_matmul(
         src, tgt,
-        _collect_unit_broadcast(src, id_col, vector_col),
-        _collect_unit_broadcast(tgt, id_col, vector_col),
+        sc.broadcast(_collect_unit(src.select(id_col, vector_col),
+                                   "margin_bitext_mine")),
+        sc.broadcast(_collect_unit(tgt.select(id_col, vector_col),
+                                   "margin_bitext_mine")),
         k, threshold, direction, id_col, vector_col,
-    )
-
-
-_COLLECT_CHUNK = 8192  # rows of driver-side buffer per numpy conversion
-
-
-def _finish_unit(sc, id_chunks, mat_chunks):
-    """Concatenate streamed chunks and broadcast (ids, unit rows)."""
-    ids = (
-        np.concatenate(id_chunks)
-        if id_chunks
-        else np.zeros(0, dtype=np.int64)
-    )
-    mat = (
-        np.vstack(mat_chunks)
-        if mat_chunks
-        else np.zeros((0, 1), dtype=np.float64)
-    )
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = 1.0
-    return sc.broadcast((ids, mat / norms[:, None]))
-
-
-def _collect_unit_broadcast(df, id_col: str, vector_col: str):
-    """Collect (id, unit-vector) arrays for one matmul side and
-    broadcast them once. Callers that mine many shard PAIRS reuse one
-    broadcast per SHARD (see margin_bitext_mine_sharded) instead of
-    re-collecting per pair.
-
-    Driver envelope (VERDICT r12 item 9): the side streams through
-    ``toLocalIterator`` in fixed-size chunks converted to numpy as they
-    arrive, so the driver holds the numpy matrix itself (bounded by the
-    broadcast budget the callers enforce) plus ONE ``_COLLECT_CHUNK``
-    of Rows — not a corpus-sized Row list, which is several times the
-    numpy footprint (a Row of 64 Python floats is ~25 bytes/value vs
-    8 in the array)."""
-    it = df.select(id_col, vector_col).toLocalIterator(
-        prefetchPartitions=True
-    )
-    id_chunks: list = []
-    mat_chunks: list = []
-    buf_i: list = []
-    buf_v: list = []
-    for r in it:
-        buf_i.append(r[0])
-        buf_v.append(r[1])
-        if len(buf_i) >= _COLLECT_CHUNK:
-            id_chunks.append(np.array(buf_i, dtype=np.int64))
-            mat_chunks.append(np.array(buf_v, dtype=np.float64))
-            buf_i, buf_v = [], []
-    if buf_i:
-        id_chunks.append(np.array(buf_i, dtype=np.int64))
-        mat_chunks.append(np.array(buf_v, dtype=np.float64))
-    return _finish_unit(
-        df.sparkSession.sparkContext, id_chunks, mat_chunks
     )
 
 
@@ -2022,26 +2013,18 @@ def margin_bitext_mine_sharded(
     if assign not in ("hash", "mod"):
         raise ValueError(f"assign must be hash|mod, got {assign!r}")
 
-    # Validate + budget-check + collect each SHARD exactly once, then
-    # reuse its broadcast for every pair it participates in. The old
-    # loop called margin_bitext_mine per pair, which re-ran the size
-    # aggregate AND the collect for both sides of every pair — an
-    # src_shards×tgt_shards grid paid 2·P·(agg+collect) driver jobs
-    # for P pairs where S+T suffice (guide §1.2: don't recompute what
-    # a pass already produced). Outputs are unchanged: each pair still
-    # mines from exactly its shards' vectors with shard-pair margins.
-    #
-    # r12 refinement: ONE size aggregate and ONE collect per SIDE —
-    # the shard column rides along and the driver splits the arrays —
-    # instead of per-shard jobs (n scans of the side each). The driver
-    # memory envelope is unchanged: the per-shard variant already held
-    # every shard's broadcast alive simultaneously for the pair loop.
+    # Budget-check and collect each SIDE once (one size aggregate, one
+    # streamed collect with the shard column riding along), then split
+    # it into per-shard broadcasts on the driver and reuse each for
+    # every pair its shard takes part in: S+T driver jobs for an S×T
+    # grid, not 2·S·T.
     def _shards(df, n, side):
         parts = [
             df if n == 1 else df.filter(_shard_pred(id_col, n, i, assign))
             for i in range(n)
         ]
         budget = _broadcast_budget(df)
+        sc = df.sparkSession.sparkContext
         if n == 1:
             if _vector_set_bytes(df, vector_col) > budget:
                 raise ValueError(
@@ -2049,9 +2032,9 @@ def margin_bitext_mine_sharded(
                     f"exceeds the driver broadcast budget "
                     f"({BROADCAST_BYTES_CONF}); raise the shard count."
                 )
-            return parts, [
-                _collect_unit_broadcast(df, id_col, vector_col)
-            ]
+            return parts, [sc.broadcast(_collect_unit(
+                df.select(id_col, vector_col), "margin_bitext_mine_sharded"
+            ))]
         shard = (
             F.pmod(F.xxhash64(F.col(id_col)), F.lit(n))
             if assign == "hash"
@@ -2075,41 +2058,12 @@ def margin_bitext_mine_sharded(
                     f"exceeds the driver broadcast budget "
                     f"({BROADCAST_BYTES_CONF}); raise the shard count."
                 )
-        # ONE pass over the side, streamed (VERDICT r12 item 9): the
-        # budget check above bounds every shard's BROADCAST, but a
-        # full .collect() would additionally hold the whole side as a
-        # transient Row list — several times the numpy footprint.
-        # toLocalIterator + per-shard chunked numpy conversion keeps
-        # the driver at (all shards' numpy, which the pair loop holds
-        # anyway) + n shards × one _COLLECT_CHUNK row buffer.
-        it = df.select(shard, id_col, vector_col).toLocalIterator(
-            prefetchPartitions=True
+        keys, ids, unit = _collect_unit(
+            df.select(shard, id_col, vector_col), "margin_bitext_mine_sharded"
         )
-        bufs: dict[int, tuple[list, list]] = {
-            i: ([], []) for i in range(n)
-        }
-        chunks: dict[int, tuple[list, list]] = {
-            i: ([], []) for i in range(n)
-        }
-        for r in it:
-            bi, bv = bufs[r[0]]
-            bi.append(r[1])
-            bv.append(r[2])
-            if len(bi) >= _COLLECT_CHUNK:
-                ic, mc = chunks[r[0]]
-                ic.append(np.array(bi, dtype=np.int64))
-                mc.append(np.array(bv, dtype=np.float64))
-                bufs[r[0]] = ([], [])
-        sc = df.sparkSession.sparkContext
-        bcs = []
-        for i in range(n):
-            bi, bv = bufs[i]
-            ic, mc = chunks[i]
-            if bi:
-                ic.append(np.array(bi, dtype=np.int64))
-                mc.append(np.array(bv, dtype=np.float64))
-            bcs.append(_finish_unit(sc, ic, mc))
-        return parts, bcs
+        return parts, [
+            sc.broadcast((ids[keys == i], unit[keys == i])) for i in range(n)
+        ]
 
     # id-column validation comes from the base operator's contract;
     # run it once per side via a zero-shard-free probe of the dtypes
